@@ -985,8 +985,3 @@ def synth_page(i: int, seed: int = 42, giant_every: int = 10000,
     ts = datetime.fromtimestamp(BASE_EPOCH + (i * 137) % 31536000, tz=timezone.utc)
     text_preview = f"{fmt} document {i}"
     return PageRow(url, ts.replace(tzinfo=None), payload, text_preview, lang)
-
-
-def synth_batch(start: int, count: int, seed: int = 42,
-                giant_every: int = 10000) -> list[PageRow]:
-    return [synth_page(i, seed, giant_every) for i in range(start, start + count)]

@@ -6,7 +6,6 @@ through Arrow UDFs and so golden hashes are stable (SURVEY.md §4.3).
 """
 
 from .sniffer import sniff_format
-from .extract import ExtractedDocument, extract_batch, extract_document
+from .extract import ExtractedDocument, extract_document
 
-__all__ = ["sniff_format", "extract_batch", "extract_document",
-           "ExtractedDocument"]
+__all__ = ["sniff_format", "extract_document", "ExtractedDocument"]

@@ -83,15 +83,14 @@ class ExtractedDocument(NamedTuple):
     assets: list  # list[Asset]
 
 
-def extract_batch(docs: list) -> list:
-    """Sequential batch conversion — the reference's ``convert_batch``
-    (/root/reference/src/converter.py:713-734, a bare loop with per-file
-    error isolation) as a pure function over ``[(url, payload), ...]``.
-
-    Library convenience only: the Spark pipeline never calls this — it
-    maps ``extract_document`` over Arrow batches instead.
-    """
-    return [extract_document(url, payload) for url, payload in docs]
+def too_large_document(url: str) -> ExtractedDocument:
+    """Status row for a payload above the size gate (A2); needs only the
+    url, so the Spark job can emit it without the blob crossing to
+    Python."""
+    return ExtractedDocument(
+        url, doc_name_from_url(url), sniffer.FMT_UNKNOWN, STATUS_TOO_LARGE,
+        None, None, 0, "none", []
+    )
 
 
 def _fail(url: str, doc_name: str, fmt: str, err: Exception) -> ExtractedDocument:
@@ -112,10 +111,7 @@ def extract_document(url: str, payload: Optional[bytes]) -> ExtractedDocument:
             None, None, 0, "none", []
         )
     if len(payload) > MAX_DOCUMENT_BYTES:
-        return ExtractedDocument(
-            url, doc_name, sniffer.FMT_UNKNOWN, STATUS_TOO_LARGE,
-            None, None, 0, "none", []
-        )
+        return too_large_document(url)
 
     fmt = sniff_format(payload)
 

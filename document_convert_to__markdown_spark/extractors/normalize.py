@@ -55,11 +55,9 @@ FILENAME_REPLACEMENT_CHARS: dict[str, str] = {
 }
 
 MAX_FILENAME_LENGTH = 200  # config.py:186
-MAX_ALT_TEXT_LENGTH = 30  # filename_normalizer.py:74
 
 _UNDERSCORE_RUNS = re.compile(r"_+")
 _DOT_RUNS = re.compile(r"\.+")
-_ALT_STRIP = re.compile(r"[^a-zA-Z0-9_一-鿿]")
 
 
 def _split_ext(filename: str) -> tuple[str, str]:
@@ -105,27 +103,10 @@ def normalize_filename(filename: str, is_document_title: bool = False) -> str:
     return name + ext
 
 
-def normalize_alt_text(text: str) -> str:
-    """filename_normalizer.py:168-193 — keep word chars + CJK, cap at 30."""
-    if not text:
-        return "image"
-    normalized = _ALT_STRIP.sub("", text)
-    if len(normalized) > MAX_ALT_TEXT_LENGTH:
-        normalized = normalized[:MAX_ALT_TEXT_LENGTH]
-    if not normalized:
-        return "image"
-    return normalized
-
-
 def generate_image_alt_text(doc_name: str, image_index: int) -> str:
     """document_processors.py:100-116 — simple-alt config is ON, so the
     alt text is always the constant ``"image"`` (config.py:220-221)."""
     return "image"
-
-
-def generate_image_filename(index: int, extension: str = ".png") -> str:
-    """document_processors.py:155-166 — ``image_%03d{ext}``."""
-    return f"image_{index:03d}{extension}"
 
 
 def normalized_relative_path(doc_name: str, image_filename: str) -> str:

@@ -32,7 +32,10 @@ from __future__ import annotations
 import re
 
 _COMMENT_RE = re.compile(r"<!--.*?-->", re.S)
-_REF_RE = re.compile(r"<ref[^>/]*/>|<ref[^>]*>.*?</ref>", re.S | re.I)
+# a self-closing ref may carry '/' in an attribute (name="x/y"); the
+# paired branch must not start at one, or it eats prose to the next </ref>
+_REF_RE = re.compile(r"<ref\b[^>]*/>|<ref\b[^>]*(?<!/)>.*?</ref>",
+                     re.S | re.I)
 _TAG_RE = re.compile(r"</?[A-Za-z][^>\n]*>")
 _EXT_LINK_RE = re.compile(r"\[(?:https?|ftp)://[^\s\]]+(?:\s+([^\]]*))?\]")
 # heading requires a CLOSING '=' run (MediaWiki: '== H ==' is a
@@ -70,9 +73,10 @@ def _strip_nested(text: str, open_tok: str, close_tok: str) -> str:
     return "".join(out)
 
 
-def _convert_links(text: str) -> str:
+def _convert_links(text: str, nested: bool = False) -> str:
     """``[[...]]`` handling with one level of nesting inside dropped
-    media/category links (captions routinely contain links)."""
+    media/category links (captions routinely contain links); links
+    nested in a kept label are converted by one recursive call."""
     out = []
     i = 0
     n = len(text)
@@ -92,6 +96,8 @@ def _convert_links(text: str) -> str:
             inner = text[i + 2:j - 2] if depth == 0 else text[i + 2:]
             low = inner.lstrip().lower()
             if not low.startswith(_DROP_LINK_PREFIXES):
+                if not nested and "[[" in inner:
+                    inner = _convert_links(inner, nested=True)
                 label = inner.rsplit("|", 1)[-1] if "|" in inner \
                     else inner
                 out.append(label)

@@ -39,10 +39,6 @@ from pyspark.sql.functions import broadcast
 from .sampling import md5_u32
 
 
-def _sigmoid(z: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-z))
-
-
 def hashed_doc_features(documents: DataFrame, dim: int = 256,
                         text_col: str = "text",
                         key_col: str = "doc_id") -> DataFrame:

@@ -1,22 +1,30 @@
-"""The extraction job: Arrow-batched, url-hash partitioned, skew-salted,
+"""The extraction job: Arrow-batched, one exchange, skew-salted,
 lineage-checkpointed, resumable.
 
 This is the Spark replacement for the reference's sequential batch loop
 (/root/reference/main.py:126-170, converter.py:713-734 — SURVEY.md §2
-A23).  Control flow:
+A23).  One linear plan:
 
-    pages ─ filter(size gate) ─ route(normal | giant) ─ repartition
+    pages ─ project(url, html gated by size, _len) ─ repartitionById(P + G)
           ─ mapInPandas(extract) ─ raw(kind: doc|metrics)
           ─ results / assets / ledger
 
 Scale design (SURVEY §4.2, north rule):
-- **url-hash repartition**: deterministic, even keying; P ≈ 2-4 × cores.
+- **one scan, one exchange, one Python node**: the size gate is a
+  projection, not a branch — ``html`` is nulled above ``max_bytes`` so
+  the blob never crosses to Python (A2), while ``_len`` still carries
+  its size; the Python body emits the ``skipped_too_large`` row (A3).
+- **url-hash placement**: normal rows go to ``pmod(hash(url), P)``, the
+  placement ``repartition(P, url)`` gives; P ≈ 2-4 × cores.
 - **salted giant-doc routing**: AQE fixes shuffle skew, not compute skew
-  inside one UDF call — documents above ``giant_threshold`` bytes are
-  split off and round-robin repartitioned so no worker gets two giants.
+  inside one UDF call — rows of at least ``giant_threshold`` bytes go to
+  their own G = max(1, P // 16) partitions P..P+G-1, salted by
+  ``xxhash64(url)``, so a giant never queues behind normal work.  Giants
+  can share a task: at P < 32 there is one giant partition.
 - **per-partition lineage**: each task appends one metrics trailer row
   (partition id, counts, bytes, elapsed) — the ledger that makes runs
-  resumable and auditable without driver-side accumulators.
+  resumable and auditable without driver-side accumulators.  It counts
+  every input row, oversize rows included.
 - **resume**: pages LEFT ANTI JOIN completed urls from a previous run's
   results (idempotent url-keyed overwrite — reference analog: the
   delete-then-rewrite at image_processor.py:100-110).
@@ -34,10 +42,12 @@ from typing import Iterator, Optional
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import StringType
 
-from ..extractors.extract import MAX_DOCUMENT_BYTES, extract_document
+from ..extractors.extract import (
+    MAX_DOCUMENT_BYTES,
+    extract_document,
+    too_large_document,
+)
 from .schemas import EXTRACT_SCHEMA, LEDGER_COLUMNS, RESULT_COLUMNS
 
 # Documents larger than this route through the low-density giant path.
@@ -66,31 +76,31 @@ def _drop_stale_temporary(spark: SparkSession, target: str) -> None:
         fs.delete(tmp, True)
 
 
-@pandas_udf(StringType())
-def _doc_name_udf(urls: pd.Series) -> pd.Series:
-    """url → doc name (same normalization chain the extractor uses),
-    for status rows whose blobs never cross to Python."""
-    from ..extractors.normalize import doc_name_from_url
-
-    return urls.map(doc_name_from_url)
-
-
 def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: doc rows per batch + one metrics trailer row."""
+    """mapInPandas body: doc rows per batch + one metrics trailer row.
+
+    Input columns are ``_gated``'s: a null ``html`` with a positive
+    ``_len`` was nulled by the size gate and becomes a
+    ``skipped_too_large`` row without any blob crossing to Python.
+    """
     from pyspark import TaskContext
 
     m_docs = m_ok = m_failed = m_skipped = m_bytes = 0
     t_part0 = time.perf_counter()
 
-    def doc_row(url: str, payload) -> dict:
+    def doc_row(url: str, payload, length: int) -> dict:
         nonlocal m_docs, m_ok, m_failed, m_skipped, m_bytes
-        t0 = time.perf_counter()
-        payload_bytes = bytes(payload) if payload is not None else None
-        doc = extract_document(url, payload_bytes)
-        elapsed_us = int((time.perf_counter() - t0) * 1e6)
+        if payload is None and length:
+            doc, elapsed_us, input_bytes = too_large_document(url), 0, length
+        else:
+            t0 = time.perf_counter()
+            payload_bytes = bytes(payload) if payload is not None else None
+            doc = extract_document(url, payload_bytes)
+            elapsed_us = int((time.perf_counter() - t0) * 1e6)
+            input_bytes = len(payload_bytes) if payload_bytes else 0
 
         m_docs += 1
-        m_bytes += len(payload_bytes) if payload_bytes else 0
+        m_bytes += input_bytes
         if doc.status == "ok":
             m_ok += 1
         elif doc.status == "failed":
@@ -112,7 +122,7 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             "n_images": doc.n_images,
             "extractor_used": doc.extractor_used,
             "elapsed_us": elapsed_us,
-            "input_bytes": len(payload_bytes) if payload_bytes else 0,
+            "input_bytes": input_bytes,
             "assets": [
                 {"name": a.name, "page": a.page, "data": a.data}
                 for a in doc.assets
@@ -123,7 +133,8 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         }
 
     for pdf in batches:
-        rows = [doc_row(u, p) for u, p in zip(pdf["url"], pdf["html"])]
+        rows = [doc_row(u, p, int(n))
+                for u, p, n in zip(pdf["url"], pdf["html"], pdf["_len"])]
         if rows:
             yield pd.DataFrame(rows)
 
@@ -140,6 +151,20 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         "m_skipped": m_skipped, "m_bytes": m_bytes,
         "m_elapsed_us": int((time.perf_counter() - t_part0) * 1e6),
     }])
+
+
+def _gated(pages: DataFrame, max_bytes: int) -> DataFrame:
+    """``url``, ``html``, ``_len``: the size gate (A2) as a projection.
+
+    ``html`` is nulled above ``max_bytes`` so the blob never crosses to
+    Python, but the row is NOT dropped (A3: no silent drops) — ``_len``
+    keeps its size for the ``skipped_too_large`` row.
+    """
+    sized = pages.select("url", "html").withColumn(
+        "_len", F.coalesce(F.length("html"), F.lit(0))
+    )
+    return sized.withColumn(
+        "html", F.when(F.col("_len") <= F.lit(max_bytes), F.col("html")))
 
 
 @dataclass
@@ -161,63 +186,30 @@ def run_extraction(
     spark = pages.sparkSession
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism * 3, 8)
+    # Giants are ~1/10⁴ of rows (FIXTURES.md), so they get a small
+    # fraction of the task count — a full `partitions` here would spawn
+    # that many near-empty Python workers per run.
+    giant_partitions = max(1, partitions // 16)
 
-    sized = pages.select("url", "html").withColumn(
-        "_len", F.coalesce(F.length("html"), F.lit(0))
+    sized = _gated(pages, max_bytes)
+    # One exchange routes both kinds of row: pmod(hash(url), P) is the
+    # placement of repartition(P, url) (deterministic even keying, north
+    # rule); giants are salted into their own partitions P..P+G-1.
+    pid = F.when(
+        F.col("_len") >= F.lit(giant_threshold),
+        F.lit(partitions)
+        + F.pmod(F.xxhash64("url"), F.lit(giant_partitions)).cast("int"),
+    ).otherwise(F.pmod(F.hash("url"), F.lit(partitions)))
+    raw = (
+        sized.repartitionById(partitions + giant_partitions, pid)
+        .mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
     )
+    return _split(raw)
 
-    # Intended 100MB gate at the scan (A2) — oversized blobs never cross
-    # to Python, but the row is NOT dropped: it becomes a
-    # skipped_too_large status row (A3: no row is dropped silently).
-    # Only the url string reaches the Python worker for name derivation.
-    oversize = (
-        sized.filter(F.col("_len") > F.lit(max_bytes))
-        .select(
-            F.lit("doc").alias("kind"),
-            "url",
-            _doc_name_udf("url").alias("doc_name"),
-            F.lit("unknown").alias("format"),
-            F.lit("skipped_too_large").alias("status"),
-            F.lit(None).cast("string").alias("error"),
-            F.lit(None).cast("string").alias("markdown"),
-            F.lit(None).cast("string").alias("md_sha256"),
-            F.lit(0).alias("n_images"),
-            F.lit("none").alias("extractor_used"),
-            F.lit(0).cast("long").alias("elapsed_us"),
-            F.col("_len").cast("long").alias("input_bytes"),
-            F.lit(None).cast(EXTRACT_SCHEMA["assets"].dataType).alias("assets"),
-            F.lit(None).cast("int").alias("partition_id"),
-            *[F.lit(None).cast("long").alias(c)
-              for c in ("m_docs", "m_ok", "m_failed", "m_skipped",
-                        "m_bytes", "m_elapsed_us")],
-        )
-    )
-    sized = sized.filter(F.col("_len") <= F.lit(max_bytes))
 
-    normal = (
-        sized.filter(F.col("_len") < giant_threshold)
-        # Explicit url-hash repartition (north rule): deterministic even
-        # keying; repartition by expression hash-partitions on url.
-        .repartition(partitions, F.col("url"))
-        .drop("_len")
-    )
-    giant = (
-        sized.filter(F.col("_len") >= giant_threshold)
-        # Salted routing: round-robin spreads giants one-per-task; a
-        # url-hash here could co-locate two giants on one worker.  Giants
-        # are ~1/10⁴ of rows (FIXTURES.md), so this branch gets a small
-        # fraction of the task count — a full `partitions` here would
-        # spawn that many near-empty Python workers per run.
-        .repartition(max(1, partitions // 16))
-        .drop("_len")
-    )
-
-    raw = normal.mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
-    raw_giant = giant.mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
-    raw = raw.unionByName(raw_giant).unionByName(oversize)
-
+def _split(raw: DataFrame) -> ExtractResult:
+    """results / assets / ledger over the combined extraction output."""
     docs = raw.filter(F.col("kind") == "doc")
-    results = docs.select(*RESULT_COLUMNS)
     assets = (
         docs.filter(F.col("n_images") > 0)
         .select("url", F.explode("assets").alias("asset"))
@@ -228,8 +220,12 @@ def run_extraction(
             F.col("asset.data").alias("data"),
         )
     )
-    ledger = raw.filter(F.col("kind") == "metrics").select(*LEDGER_COLUMNS)
-    return ExtractResult(results=results, assets=assets, ledger=ledger, raw=raw)
+    return ExtractResult(
+        results=docs.select(*RESULT_COLUMNS),
+        assets=assets,
+        ledger=raw.filter(F.col("kind") == "metrics").select(*LEDGER_COLUMNS),
+        raw=raw,
+    )
 
 
 def run_extraction_resumable(
@@ -312,9 +308,11 @@ def run_extraction_resumable(
     todo = pages
     if resume and table_exists(results_path):
         done = read_table(results_path).select("url")
-        # Broadcast-friendly when the remainder is small; at scale the
-        # anti join shuffles on url — same key as the extract
-        # repartition, so the exchange is reused.
+        # While the done set fits the broadcast threshold this is a
+        # broadcast hash join: no exchange beyond the extract one.  Past
+        # it, the sort-merge anti join hash-shuffles the pages, blobs
+        # included, in an exchange of its own — the extract exchange
+        # routes by partition id and is not reused (checked in .explain()).
         todo = pages.join(done, "url", "left_anti")
 
     plan = run_extraction(todo, partitions=partitions,
@@ -339,17 +337,8 @@ def run_extraction_resumable(
         for s in statuses
     ]).persist(StorageLevel.DISK_ONLY)
     try:
-        docs = raw.filter(F.col("kind") == "doc")
-        new_assets = (
-            docs.filter(F.col("n_images") > 0)
-            .select("url", F.explode("assets").alias("asset"))
-            .select(
-                "url",
-                F.col("asset.name").alias("asset_name"),
-                F.col("asset.page").alias("page"),
-                F.col("asset.data").alias("data"),
-            )
-        )
+        out = _split(raw)
+        new_assets = out.assets
         if resume and table_exists(f"{out_dir}/assets"):
             # A crash between the assets commit and the results commit
             # leaves those urls' asset rows committed but the url marked
@@ -364,13 +353,8 @@ def run_extraction_resumable(
                 committed, ["url", "asset_name"], "left_anti")
         write_table(new_assets, "assets")
         run_counts = {k: v for k, v in obs.get.items() if v}
-        write_table(
-            raw.filter(F.col("kind") == "metrics")
-            .select(*LEDGER_COLUMNS)
-            .withColumn("run_id", F.lit(run_id)),
-            "ledger",
-        )
-        write_table(docs.select(*RESULT_COLUMNS), "results")
+        write_table(out.ledger.withColumn("run_id", F.lit(run_id)), "ledger")
+        write_table(out.results, "results")
     finally:
         raw.unpersist()
 

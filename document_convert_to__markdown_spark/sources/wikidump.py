@@ -244,7 +244,7 @@ def _explode_dump_blobs(batches):
             if n_seen == 0:
                 # a dump file with zero pages is queryable, not silent
                 rows.append((_wiki_url(None), None, None, None, None,
-                             None, "skipped_empty_dump"))
+                             None, None, "skipped_empty_dump"))
         yield pd.DataFrame(rows, columns=_COLS)
 
 
@@ -261,7 +261,10 @@ def read_wikidump_pages(spark, path_glob: str,
     filterable by accident.
     """
     files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.bz2")
+             # dumps only: '*.bz2' would also read the companion
+             # *-multistream-index.txt.bz2 files; '.xml*' keeps split
+             # dumps such as ...multistream1.xml-p1p41242.bz2
+             .option("pathGlobFilter", "*.xml*.bz2")
              .load(path_glob)
              .select("content"))
     pages = files.mapInPandas(_explode_dump_blobs,

@@ -5,7 +5,8 @@ absent"), but at 10^12-document scale new Common-Crawl snapshots arrive
 continuously; the Spark-native shape is a file/Iceberg *stream* into the
 same extraction logic the batch job uses:
 
-    readStream(pages) ─ size gate ─ mapInPandas(extract) ─ writeStream
+    readStream(pages) ─ project(size gate) ─ mapInPandas(extract)
+                      ─ results ─ writeStream
 
 Checkpoint semantics come from Spark itself: the streaming checkpoint
 (WAL + source offsets) makes the run **resumable exactly-once at the
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extractors.extract import MAX_DOCUMENT_BYTES
-from ..pipeline.job import _doc_name_udf, _extract_partition
+from ..pipeline.job import _extract_partition, _gated
 from ..pipeline.schemas import EXTRACT_SCHEMA, PAGES_SCHEMA, RESULT_COLUMNS
 
 
@@ -77,12 +78,11 @@ def stream_extract_df(
     (small ``maxFilesPerTrigger`` keeps any one batch's giant count
     low).
 
-    Batch/stream parity for the size gate: oversize documents are NOT
-    filtered away — they surface as blob-free ``skipped_too_large``
-    status rows, exactly like run_extraction's A2 branch (no silent row
-    drops; only the url string reaches Python for name derivation).
-    The union is stateless (two filters of one source), so it costs no
-    extra streaming query.
+    Batch/stream parity for the size gate: the same gated projection
+    as run_extraction (``pipeline.job._gated``), with no exchange.
+    Oversize documents are NOT filtered away — their ``html`` is nulled
+    before Python, and the extractor body emits a blob-free
+    ``skipped_too_large`` status row for each (no silent row drops).
     """
     if source_format == "warc":
         from ..sources.warc import read_warc_pages_stream
@@ -96,31 +96,9 @@ def stream_extract_df(
                                    max_files_per_trigger)
         pages = reader.parquet(_as_stream_source(input_path))
 
-    sized = pages.select("url", "html").withColumn(
-        "_len", F.coalesce(F.length("html"), F.lit(0))
-    )
-    oversize = (
-        sized.filter(F.col("_len") > F.lit(max_bytes))
-        .select(
-            "url",
-            _doc_name_udf("url").alias("doc_name"),
-            F.lit("unknown").alias("format"),
-            F.lit("skipped_too_large").alias("status"),
-            F.lit(None).cast("string").alias("error"),
-            F.lit(None).cast("string").alias("markdown"),
-            F.lit(None).cast("string").alias("md_sha256"),
-            F.lit(0).alias("n_images"),
-            F.lit("none").alias("extractor_used"),
-            F.lit(0).cast("long").alias("elapsed_us"),
-            F.col("_len").cast("long").alias("input_bytes"),
-        )
-    )
-    ok_sized = sized.filter(
-        F.col("_len") <= F.lit(max_bytes)
-    ).select("url", "html")
-    raw = ok_sized.mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
-    docs = raw.filter(F.col("kind") == "doc").select(*RESULT_COLUMNS)
-    return docs.unionByName(oversize)
+    raw = _gated(pages, max_bytes).mapInPandas(
+        _extract_partition, schema=EXTRACT_SCHEMA)
+    return raw.filter(F.col("kind") == "doc").select(*RESULT_COLUMNS)
 
 
 def run_stream_extraction(

@@ -170,8 +170,8 @@ steady-state throughput with noisy-neighbor windows de-correlated).
 Why the pipeline scales: the hot path has no shuffle after the single
 url-hash repartition — extraction is partition-parallel Arrow-batched
 Python with per-partition lineage trailers, and giant documents are
-routed to their own round-robin branch so no task inherits two of them
-(compute-skew control AQE cannot provide).  Reference single-thread
+salted into their own partitions of that one exchange, so they never
+queue behind normal work (compute-skew control AQE cannot provide).  Reference single-thread
 baseline is ~2.5-3.3 docs/s (`BASELINE.md`); every level above clears
 it by orders of magnitude per core.
 

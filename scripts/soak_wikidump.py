@@ -95,7 +95,8 @@ def main() -> None:
         md = pages.select(conv(F.col("text")).alias("md"))
         bad_md = md.filter(
             F.col("md").contains("{{") | F.col("md").contains("{|")
-            | F.col("md").contains("<ref") | (F.length("md") < 100)
+            | F.col("md").contains("<ref") | F.col("md").contains("[[")
+            | (F.length("md") < 100)
         ).count()
         conv_sec = time.time() - t2
 

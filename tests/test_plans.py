@@ -74,11 +74,15 @@ def test_extraction_single_shuffle_and_pruning(spark):
         run_extraction(spark.read.parquet(pages_path), partitions=8).results,
         mode="simple",
     )
-    # One hash exchange (url repartition) on the normal branch, one
-    # round-robin on the giant branch — and nothing after the UDF.
-    assert plan.count("Exchange hashpartitioning(url") == 1, plan
-    # giant branch: round-robin (or SinglePartition when partitions//16==1)
-    assert plan.count("Exchange") == 2, plan
+    # One scan, one exchange routing normal and giant rows by partition
+    # id, one Python node — the size gate is a projection, not a branch,
+    # and nothing shuffles after the UDF.
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange shufflepartitionidpassthrough" in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+    assert "BatchEvalPython" not in plan, plan
     # Only url+html leave the scan: text/lang/warc_ts pruned.
     assert "ReadSchema: struct<url:string,html:binary>" in plan, plan
 

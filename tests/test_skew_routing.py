@@ -1,5 +1,6 @@
-"""Giant-document skew routing: both branches produce identical bytes,
-ledger covers both branches' partitions, giants spread across tasks."""
+"""Giant-document skew routing: salted giant partitions produce identical
+bytes, the ledger covers every partition and every url, and giants stay
+in their own partitions."""
 
 from pyspark.sql import functions as F
 
@@ -25,7 +26,27 @@ def test_oversize_docs_become_status_rows_not_drops(spark):
     row = skipped.first()
     assert row["markdown"] is None and row["input_bytes"] > 5000
     assert row["doc_name"]  # name derived from url without touching blob
+    # The ledger accounts for every url, oversize rows included.
+    assert plan.ledger.agg(F.sum("m_docs")).first()[0] == 50
     results.unpersist()
+
+
+def test_giant_partitions_hold_exactly_the_giants(spark):
+    """Ledger rows past the first ``partitions`` belong to the salted
+    giant partitions; they hold every giant and nothing else."""
+    threshold = 8 * 1024
+    pages = synth_pages_df(spark, 60, giant_every=0).cache()
+    sizes = pages.select(F.length("html").alias("n")).collect()
+    giants = [r["n"] for r in sizes if (r["n"] or 0) >= threshold]
+    assert 0 < len(giants) < 60, "corpus must mix giants and normal docs"
+
+    plan = run_extraction(pages, partitions=32, giant_threshold=threshold)
+    ledger = plan.ledger.collect()
+    assert sorted(r["partition_id"] for r in ledger) == list(range(34))
+    giant_rows = [r for r in ledger if r["partition_id"] >= 32]
+    assert sum(r["m_docs"] for r in giant_rows) == len(giants)
+    assert sum(r["m_bytes"] for r in giant_rows) == sum(giants)
+    pages.unpersist()
 
 
 def test_giant_routing_byte_parity_and_ledger(spark):
@@ -36,16 +57,16 @@ def test_giant_routing_byte_parity_and_ledger(spark):
     plan = run_extraction(pages, partitions=8, giant_threshold=GIANT_THRESHOLD)
     results = plan.results.cache()
 
-    # No row lost or duplicated across the two branches.
+    # No row lost or duplicated by the routing.
     assert results.count() == 300
     assert results.select("url").distinct().count() == 300
 
-    # Ledger has one metrics row per partition of BOTH branches:
-    # 8 normal + max(1, 8//16) giant.
+    # Ledger has one metrics row per partition: 8 normal + max(1, 8//16)
+    # giant.
     assert plan.ledger.count() == 9
     assert plan.ledger.agg(F.sum("m_docs")).first()[0] == 300
 
-    # Giant-branch outputs are byte-identical to the standalone extractor
+    # Giant-partition outputs are byte-identical to the standalone extractor
     # (routing must never change extraction semantics).
     giants = pages.filter(F.length("html") >= GIANT_THRESHOLD) \
         .select("url", "html").collect()

@@ -212,3 +212,37 @@ class TestReviewRegressions:
                                     max_page_bytes=1 << 20))
         assert rows == [(None, None, None, None, None, None,
                          "failed_page")]
+
+    def test_slash_bearing_self_closing_ref_keeps_prose(self):
+        # a '/' inside a self-closing ref's attribute must not let the
+        # paired <ref>...</ref> branch swallow prose up to the next </ref>
+        md = wikitext_to_markdown(
+            'A<ref name="x/y"/> keep this. B<ref>cite</ref> end')
+        assert md.strip() == "A keep this. B end"
+
+    def test_link_nested_in_kept_label_is_converted(self):
+        assert wikitext_to_markdown("[[A|x [[B]] y]]").strip() == "x B y"
+        assert wikitext_to_markdown("[[A|x [[B|c]] y]]").strip() == \
+            "x c y"
+
+    def test_directory_read_skips_index_keeps_split_dumps(self, spark,
+                                                          tmp_path):
+        dump, index = build_wikidump(ROWS, pages_per_stream=2)
+        (tmp_path / "w-multistream.xml.bz2").write_bytes(dump)
+        (tmp_path / "w-multistream-index.txt.bz2").write_bytes(
+            bz2.compress(index.encode()))
+        (tmp_path / "w-multistream1.xml-p1p41242.bz2").write_bytes(dump)
+        rows = read_wikidump_pages(spark, str(tmp_path),
+                                   namespaces=None).collect()
+        # both dumps read; the index file yields no spurious status row
+        assert len(rows) == 2 * len(ROWS)
+        assert {r["status"] for r in rows} == {"ok"}
+
+    def test_zero_page_dump_is_a_status_row(self, spark, tmp_path):
+        # the status row once had 7 values for 8 columns and failed the
+        # whole read instead of accounting for the empty file
+        (tmp_path / "e-multistream.xml.bz2").write_bytes(
+            bz2.compress(b"<mediawiki></mediawiki>"))
+        rows = read_wikidump_pages(spark, str(tmp_path)).collect()
+        assert [(r["title"], r["text"], r["status"]) for r in rows] == \
+            [(None, None, "skipped_empty_dump")]
