@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..data.synth import synth_page
 from .schemas import PAGES_SCHEMA
+from .session import prepare_python_worker
 
 
 def synth_pages_df(
@@ -31,6 +32,7 @@ def synth_pages_df(
     partitions = min(partitions, max(n_docs, 1))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prepare_python_worker()
         for pdf in batches:
             rows = [synth_page(int(i), seed, giant_every, size_scale)
                     for i in pdf["id"]]
