@@ -30,6 +30,10 @@ Scale design (SURVEY §4.2, north rule):
   delete-then-rewrite at image_processor.py:100-110).
 - **no per-row Python UDFs** (input_hint mandate): the only Python
   boundary is Arrow-batched ``mapInPandas``.
+- **persisted writes at the cores' width**: ``run_extraction_resumable``
+  writes its three tables from the cache with one task per core (the
+  ledger with one), not the extraction's P + G — each write task costs
+  a file and a serial rename in the job commit.
 - **a task costs its documents**: the body first calls
   ``session.prepare_python_worker()``, which cuts a reused worker's
   fixed ~0.2 s a task that ``m_elapsed_us`` never sees.
@@ -245,13 +249,20 @@ def run_extraction_resumable(
 ) -> dict:
     """Execute with persistence + resume; returns summary counters.
 
-    **Single write amplification** (round-2 fix, VERDICT.md perf note):
-    round 1 persisted a combined ``raw`` table and then re-derived
-    results/assets from it — every markdown and asset blob hit table
-    storage twice, the cost of the whole job again at 100 TB.  Now the
-    extraction output is cached for the job's duration (memory,
-    spilling to executor-local disk) and each table is written exactly
-    once: bytes written ≈ results + assets + ledger ≈ 1x output.
+    **Single write amplification, at the cores' width**: the extraction
+    runs once, at its P + G tasks, into a DISK_ONLY cache, and each
+    table is written from it exactly once (bytes written ≈ results +
+    assets + ledger ≈ 1x output).  ``results`` and ``assets`` are
+    coalesced to ``defaultParallelism`` tasks and the ledger, P + G
+    small rows, to one: every write task costs a file, a task commit
+    and a serial rename in the v1 job commit (a 1,000-row parquet
+    append on a 4-core VM: ~0.5 s at 13 tasks, ~0.2 s at 4 or 1), and
+    reading a local cache gains nothing from the extraction's wider,
+    skew-balanced split.  The extraction keeps its width only because
+    adaptive execution (which ``build_session`` pins on) materialises
+    the cached relation as its own query stage; with AQE off the first
+    coalesced write runs the extraction inside its own few tasks —
+    same bytes, narrower stage.
 
     Resume anti-joins pages against urls already committed to
     ``results`` — only unfinished work reruns; a finished job re-run is
@@ -356,10 +367,13 @@ def run_extraction_resumable(
                          .select("url", "asset_name"))
             new_assets = new_assets.join(
                 committed, ["url", "asset_name"], "left_anti")
-        write_table(new_assets, "assets")
+        # Written at the cores' width, not P + G (docstring).
+        cores = spark.sparkContext.defaultParallelism
+        write_table(new_assets.coalesce(cores), "assets")
         run_counts = {k: v for k, v in obs.get.items() if v}
-        write_table(out.ledger.withColumn("run_id", F.lit(run_id)), "ledger")
-        write_table(out.results, "results")
+        write_table(out.ledger.withColumn("run_id", F.lit(run_id))
+                    .coalesce(1), "ledger")
+        write_table(out.results.coalesce(cores), "results")
     finally:
         raw.unpersist()
 

@@ -221,14 +221,22 @@ design); every round-5 multimodal query ≤2.6 s.
 
 ## Soak: 200k docs / 1.3GB through the full resumable pipeline
 
-`run_extraction_resumable` (extract -> raw parquet -> derive results /
-assets / ledger -> observe-based summary) over a 200,000-page corpus
-(size_scale=4, 1.3GB, one 122MB outlier) at local[32]:
+`run_extraction_resumable` over a 200,000-page corpus (size_scale=4,
+1.3GB, one 122MB outlier) at local[32], as it was in round 1 (extract
+-> raw parquet -> derive results / assets / ledger):
 **200,000/200,000 rows accounted for in 102s = 1960 docs/s sustained**,
 statuses `{{ok: 198620, skipped_empty: 817, skipped_unsupported: 562,
 skipped_too_large: 1}}`. The 122MB outlier surfaced a silent-drop bug in
 the size gate (row filtered instead of becoming a status row) - now
 fixed and regression-tested (`tests/test_skew_routing.py`).
+
+The path today: the extraction runs once, at its P + G tasks, into a
+`DISK_ONLY` cache, and three commits (assets -> ledger -> results) are
+written from it with an observe-based summary riding on the first.
+`results` and `assets` are written one task (one file) per core and the
+ledger, P + G small rows, as one: every write task costs a file, a task
+commit and a serial rename in the v1 job commit, and reading a local
+cache gains nothing from the extraction's wider split.
 
 ## Soak: write amplification of the resumable path (round-2 fix)
 

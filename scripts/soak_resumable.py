@@ -10,7 +10,9 @@ script is the evidence: it materializes a corpus, runs
 
 which should be ~1x the output payload (markdown is smaller than the
 source HTML, so the ratio lands *below* 1 for this mix — round 1's
-design was that ratio plus a full extra copy of every blob).
+design was that ratio plus a full extra copy of every blob).  ``files``
+counts each table's part-files: one commit each, written one task per
+core for results and assets and one task for the ledger.
 
 Usage: python scripts/soak_resumable.py [n_docs] [size_scale]
 Prints one JSON line; safe to rerun (fresh tmp output per run).
@@ -34,6 +36,11 @@ def du(path: str) -> int:
             if os.path.isfile(fp):
                 total += os.path.getsize(fp)
     return total
+
+
+def part_files(path: str) -> int:
+    return sum(f.startswith("part-")
+               for _root, _dirs, files in os.walk(path) for f in files)
 
 
 def main() -> None:
@@ -74,9 +81,10 @@ def main() -> None:
                                            run_id="soak")
         wall = time.time() - t0
 
-        tables = {name: du(os.path.join(out, name))
-                  for name in ("results", "assets", "ledger")
-                  if os.path.isdir(os.path.join(out, name))}
+        names = [name for name in ("results", "assets", "ledger")
+                 if os.path.isdir(os.path.join(out, name))]
+        tables = {name: du(os.path.join(out, name)) for name in names}
+        files = {name: part_files(os.path.join(out, name)) for name in names}
         bytes_out = sum(tables.values())
         stray = du(out) - bytes_out  # anything else (e.g. a raw table)
 
@@ -90,6 +98,7 @@ def main() -> None:
             "bytes_in": bytes_in,
             "bytes_out": bytes_out,
             "tables": tables,
+            "files": files,
             "stray_bytes": stray,
             "amplification_vs_input": round(bytes_out / bytes_in, 3),
             "summary": summary,
