@@ -52,7 +52,8 @@ def main(argv: list[str] | None = None) -> int:
                         help="anti-join completed urls from a prior run")
     parser.add_argument("--partitions", type=int, default=None)
     parser.add_argument("--cores", default=None,
-                        help="local[N] cores (default: SPARK_GRAFT_CPUS or 32)")
+                        help="local[N] cores (default: SPARK_GRAFT_CPUS, else "
+                             "the host's CPU count)")
     parser.add_argument("--table-format", default="parquet",
                         choices=["parquet", "snapshot"],
                         help="derived-table format: plain parquet dirs or "

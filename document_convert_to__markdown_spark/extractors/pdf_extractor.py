@@ -10,7 +10,9 @@ Scope: classic-xref PDFs with ``N 0 obj``/``endobj`` bodies, page trees,
 Flate or raw content streams, text shown via Tj / TJ / ' / " inside
 BT..ET with Td/TD/Tm/T* positioning, and image XObjects drawn via Do.
 That covers the corpus our deterministic synthesizer emits plus common
-simple generators.  Reading order: spans sorted by (page, -y, x, seq);
+simple generators.  Inflated stream bytes count against a per-document
+budget; past it the document fails with ``DecompressionLimit`` instead of
+expanding without bound.  Reading order: spans sorted by (page, -y, x, seq);
 spans sharing a baseline (|Δy| ≤ 2) join into one line with spaces.
 
 Per-page text blocks are joined with blank lines; the result then runs
@@ -32,6 +34,17 @@ _STREAM_RE = re.compile(rb"stream\r?\n")
 _NAME_RE = re.compile(rb"/([A-Za-z0-9_.#+-]+)")
 _REF_RE = re.compile(rb"(\d+)\s+(\d+)\s+R\b")
 _NUM_RE = re.compile(rb"[+-]?\d*\.?\d+")
+
+# Per-document /FlateDecode expansion budget: every inflated byte of every
+# stream counts against min(ratio x payload, ceiling).  zlib reaches
+# ~1000:1, so without it a PDF under the 100 MB gate could inflate to
+# ~100 GB inside one worker.
+INFLATE_RATIO = 100
+INFLATE_CEILING = 256 * 1024 * 1024
+
+
+class DecompressionLimit(Exception):
+    """A document's streams inflate past its expansion budget."""
 
 
 class Ref(NamedTuple):
@@ -170,6 +183,8 @@ class _PdfObjects:
     def __init__(self, payload: bytes):
         self.payload = payload
         self.objects: dict[int, tuple[dict, bytes | None]] = {}
+        self.inflate_budget = min(INFLATE_RATIO * len(payload), INFLATE_CEILING)
+        self.inflate_left = self.inflate_budget
         self._scan()
 
     def _scan(self):
@@ -237,11 +252,29 @@ class _PdfObjects:
         data = raw
         for f in filters:
             if f == "/FlateDecode":
-                try:
-                    data = zlib.decompress(data)
-                except zlib.error:
+                data = self._inflate(data)
+                if data is None:
                     return None
         return data
+
+    def _inflate(self, data: bytes) -> bytes | None:
+        """``zlib.decompress`` that stops one byte past the budget left.
+
+        ``None`` for a corrupt or truncated stream, as ``zlib.decompress``
+        raising ``zlib.error`` gave; trailing bytes after the stream's end
+        are ignored, as there.
+        """
+        inflater = zlib.decompressobj()
+        try:
+            out = inflater.decompress(data, self.inflate_left + 1)
+        except zlib.error:
+            return None
+        if len(out) > self.inflate_left:
+            raise DecompressionLimit(
+                f"/FlateDecode output passes the {self.inflate_budget}-byte "
+                f"budget of a {len(self.payload)}-byte document")
+        self.inflate_left -= len(out)
+        return out if inflater.eof else None
 
 
 # --- content stream text extraction ---------------------------------------
@@ -303,32 +336,47 @@ class _Span(NamedTuple):
     text: str
 
 
+# First bytes of a number token: ``[+-]?\d*\.?\d+`` in ``_TOKEN_RE``.
+_NUMBER_START = frozenset(b"+-.0123456789")
+
+
 def _extract_text_spans(content: bytes) -> list[_Span]:
+    """Spans of one page's content streams, in drawing order.
+
+    One ``findall`` pass; each token is classified by its first byte,
+    after a test for ``Tj``/``TJ``/``T*``, which end most text lines.
+    """
     spans: list[_Span] = []
     stack: list[float] = []
     x = y = 0.0
     leading = 0.0
     seq = 0
-
-    def show(text: str):
-        nonlocal seq
-        if text:
-            spans.append(_Span(y, x, seq, text))
-            seq += 1
-
     pending_strings: list[str] = []
     in_array = False
 
-    for m in _TOKEN_RE.finditer(content):
-        tok = m.group(0)
-        c0 = tok[:1]
-        if c0 == b"(":
+    for tok in _TOKEN_RE.findall(content):
+        if tok == b"Tj" or tok == b"TJ":
+            text = "".join(pending_strings)
+            if text:
+                spans.append(_Span(y, x, seq, text))
+                seq += 1
+            pending_strings = []
+            stack.clear()
+            continue
+        if tok == b"T*":
+            y -= leading if leading else 12.0
+            stack.clear()
+            continue
+        c = tok[0]
+        if c in _NUMBER_START:
+            stack.append(float(tok))
+        elif c == 0x28:  # '(' literal string
             s = _decode_pdf_string(tok)
             if in_array:
                 pending_strings.append(s)
             else:
                 pending_strings = [s]
-        elif c0 == b"<" and tok != b"<<":
+        elif c == 0x3C:  # '<' hex string
             hexs = _WS_RE.sub(b"", tok[1:-1])
             try:
                 raw = bytes.fromhex(hexs.decode("ascii"))
@@ -340,52 +388,37 @@ def _extract_text_spans(content: bytes) -> list[_Span]:
                 pending_strings.append(s)
             else:
                 pending_strings = [s]
-        elif tok == b"[":
+        elif c == 0x5B:  # '['
             in_array = True
             pending_strings = []
-        elif tok == b"]":
+        elif c == 0x5D:  # ']'
             in_array = False
-        elif c0 == b"/":
+        elif c == 0x2F:  # '/' name: operands stay on the stack
             continue
-        elif tok[0:1].isdigit() or c0 in b"+-." or (len(tok) > 1 and tok[1:2].isdigit()):
-            try:
-                stack.append(float(tok))
-            except ValueError:
-                pass
         else:
-            op = tok
-            if op == b"Td":
+            if tok == b"Td":
                 if len(stack) >= 2:
                     x += stack[-2]
                     y += stack[-1]
-            elif op == b"TD":
+            elif tok == b"TD":
                 if len(stack) >= 2:
                     x += stack[-2]
                     y += stack[-1]
                     leading = -stack[-1]
-            elif op == b"Tm":
+            elif tok == b"Tm":
                 if len(stack) >= 6:
                     x, y = stack[-2], stack[-1]
-            elif op == b"TL":
+            elif tok == b"TL":
                 if stack:
                     leading = stack[-1]
-            elif op == b"T*":
-                y -= leading if leading else 12.0
-            elif op == b"BT":
+            elif tok == b"BT":
                 x = y = 0.0
-            elif op == b"Tj":
-                show("".join(pending_strings))
-                pending_strings = []
-            elif op == b"TJ":
-                show("".join(pending_strings))
-                pending_strings = []
-            elif op == b"'":
+            elif tok == b"'" or tok == b'"':
                 y -= leading if leading else 12.0
-                show("".join(pending_strings))
-                pending_strings = []
-            elif op == b'"':
-                y -= leading if leading else 12.0
-                show("".join(pending_strings))
+                text = "".join(pending_strings)
+                if text:
+                    spans.append(_Span(y, x, seq, text))
+                    seq += 1
                 pending_strings = []
             stack.clear()
     return spans

@@ -45,6 +45,12 @@ def prepare_python_worker() -> None:
         gc.freeze()
 
 
+def default_cores() -> str:
+    """The N of the default ``local[N]`` master: ``SPARK_GRAFT_CPUS``
+    when set, else this host's CPU count."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+
+
 def build_session(
     app_name: str = "doc2md",
     master: str | None = None,
@@ -62,11 +68,11 @@ def build_session(
     512 → 8.13s — 128 is the sweet spot between per-batch overhead and
     batch memory footprint.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cores()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if cpus.isdigit() else "32"
-        shuffle_partitions = max(2 * int(n), 8)
+        n = int(cpus) if cpus.isdigit() else os.cpu_count() or 1
+        shuffle_partitions = max(2 * n, 8)
 
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in (extra_conf or {}).items():

@@ -8,6 +8,8 @@ including the non-raw-replacement ``\\x01`` quirk at :291-295.
 
 import re
 
+from hypothesis import given, settings, strategies as st
+
 from document_convert_to__markdown_spark.extractors.cleanup import (
     clean_markdown_content,
     optimize_pdf_content,
@@ -98,3 +100,15 @@ def test_idempotent_on_well_formed():
     doc = "# Title\n\nbody text\n\n## Sub\n\nmore"
     once = clean_markdown_content(doc)
     assert clean_markdown_content(once) == once
+
+
+# Newlines, spaces, block markers, pipes, bullets, digits and the
+# whitespace that ``\s`` matches but the literal guards do not name.
+_ALPHABET = "\n #*-|•·1.\t\r\x0b\u3000表"
+
+
+@settings(max_examples=1000, deadline=None)
+@given(content=st.text(alphabet=_ALPHABET, max_size=60), is_pdf=st.booleans())
+def test_clean_markdown_matches_reference_chain_property(content, is_pdf):
+    assert (clean_markdown_content(content, is_pdf)
+            == reference_clean(content, is_pdf))

@@ -25,6 +25,8 @@ from document_convert_to__markdown_spark.extractors.normalize import (
 from document_convert_to__markdown_spark.extractors.pdf_extractor import extract_pdf
 from document_convert_to__markdown_spark.extractors.xlsx_extractor import extract_xlsx
 import random
+import tracemalloc
+import zlib
 
 
 # --- sniffer (A4) ----------------------------------------------------------
@@ -161,6 +163,48 @@ def test_pdf_reading_order():
     lines = result.text.split("\n")
     first = next(i for i, l in enumerate(lines) if "Page 1 heading" in l)
     assert first == 0  # top of page comes first
+
+
+def _one_stream_pdf(content: bytes, deflated: bytes | None = None) -> bytes:
+    """One page whose one content stream is ``content`` under /FlateDecode."""
+    stream = zlib.compress(content, 9) if deflated is None else deflated
+    objs = [b"<< /Type /Catalog /Pages 2 0 R >>",
+            b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
+            b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
+            % (len(stream), stream)]
+    body = b"".join(b"%d 0 obj\n%s\nendobj\n" % (i, o)
+                    for i, o in enumerate(objs, 1))
+    return b"%PDF-1.4\n" + body + b"trailer\n<< /Root 1 0 R >>\n%%EOF\n"
+
+
+def test_pdf_flate_bomb_fails_without_inflating_it():
+    # 8 MB of text operators and blanks deflate to ~8 KB: far past the
+    # 100x-payload budget, so the row fails with its own error class
+    # after inflating at most the budget, not the whole stream.
+    full = 8 << 20
+    content = b"BT (bomb) Tj ET\n" + b" " * full
+    pdf = _one_stream_pdf(content)
+    assert len(pdf) < 16 << 10
+    tracemalloc.start()
+    try:
+        doc = extract_document("https://a.example/bomb.pdf", pdf)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert doc.status == "failed"
+    assert doc.error.startswith("DecompressionLimit: ")
+    assert peak < full // 2
+
+
+def test_pdf_flate_within_budget_and_truncated_streams():
+    text = b"BT 72 720 Td (kept under budget) Tj ET"
+    doc = extract_document("https://a.example/ok.pdf", _one_stream_pdf(text))
+    assert doc.status == "ok" and "kept under budget" in doc.markdown
+    # A truncated stream reads as no text, as zlib.decompress's error did.
+    cut = _one_stream_pdf(b"", deflated=zlib.compress(text)[:-6])
+    assert extract_pdf(cut).text == ""
+    assert extract_document("https://a.example/cut.pdf", cut).status == "ok"
 
 
 def test_docx_roundtrip():

@@ -6,6 +6,7 @@ before every task, and on Python 3.11 each cached ``zipimporter`` then
 re-reads its whole archive directory; the daemon runs a full
 ``gc.collect()`` after every task.  The helper drops the zip importers
 from ``sys.path_importer_cache`` and freezes the long-lived heap once.
+Also here: ``default_cores``, the session's default ``local[N]``.
 """
 
 import gc
@@ -17,6 +18,7 @@ import zipimport
 import pytest
 
 from document_convert_to__markdown_spark.pipeline.session import (
+    default_cores,
     prepare_python_worker,
 )
 
@@ -117,3 +119,13 @@ def test_real_worker_is_prepared_by_extract_body(spark):
     assert row.trailers == 1  # only the metrics trailer
     assert row.after == 0
     assert row.frozen > 0
+
+
+def test_default_cores_is_env_then_host_cpu_count(monkeypatch):
+    # build_session's local[N] and its shuffle width start from this:
+    # SPARK_GRAFT_CPUS when set, else the host's CPUs, never a fixed 32.
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == "3"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setattr("os.cpu_count", lambda: 5)
+    assert default_cores() == "5"
