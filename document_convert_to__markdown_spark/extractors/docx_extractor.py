@@ -30,6 +30,8 @@ import zipfile
 import xml.etree.ElementTree as ET
 from typing import NamedTuple
 
+from .bounded import Budget
+
 W_NS = "{http://schemas.openxmlformats.org/wordprocessingml/2006/main}"
 A_NS = "{http://schemas.openxmlformats.org/drawingml/2006/main}"
 R_NS = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships}"
@@ -45,11 +47,11 @@ class DocxResult(NamedTuple):
     malformed_list_levels: bool
 
 
-def _load_relationships(zf: zipfile.ZipFile) -> dict[str, str]:
+def _load_relationships(zf: zipfile.ZipFile, budget: Budget) -> dict[str, str]:
     """rId → media target path from word/_rels/document.xml.rels."""
     rels: dict[str, str] = {}
     try:
-        data = zf.read("word/_rels/document.xml.rels")
+        data = budget.read(zf, "word/_rels/document.xml.rels")
     except KeyError:
         return rels
     try:
@@ -133,8 +135,9 @@ def extract_docx(payload: bytes, doc_name: str) -> DocxResult:
     images: list[tuple[str, str, bytes]] = []
     malformed = False
 
+    budget = Budget(payload)
     with zipfile.ZipFile(io.BytesIO(payload)) as zf:
-        rels = _load_relationships(zf)
+        rels = _load_relationships(zf, budget)
 
         # Media extraction — document_processors.py:266-304 semantics:
         # zip order, image extensions only, 1-based renumbering over ALL
@@ -146,10 +149,10 @@ def extract_docx(payload: bytes, doc_name: str) -> DocxResult:
             if file_ext in _IMAGE_EXTS:
                 new_filename = f"image_{i:03d}{file_ext}"
                 key = f"image_{i:03d}"
-                images.append((key, new_filename, zf.read(media_file)))
+                images.append((key, new_filename, budget.read(zf, media_file)))
 
         try:
-            body_xml = zf.read("word/document.xml")
+            body_xml = budget.read(zf, "word/document.xml")
         except KeyError:
             return DocxResult("", images, False)
 

@@ -18,6 +18,7 @@ import posixpath
 import zipfile
 from xml.etree import ElementTree
 
+from .bounded import Budget
 from .html_extractor import html_to_markdown
 
 _CNS = "{urn:oasis:names:tc:opendocument:xmlns:container}"
@@ -25,13 +26,14 @@ _ONS = "{http://www.idpf.org/2007/opf}"
 _DC = "{http://purl.org/dc/elements/1.1/}"
 
 
-def _spine_hrefs(zf: zipfile.ZipFile) -> tuple:
+def _spine_hrefs(zf: zipfile.ZipFile, budget: Budget) -> tuple:
     """(title, ordered chapter hrefs) from the OPF; ('', []) on failure."""
     try:
-        container = ElementTree.fromstring(zf.read("META-INF/container.xml"))
+        container = ElementTree.fromstring(
+            budget.read(zf, "META-INF/container.xml"))
         rootfile = container.find(
             f"{_CNS}rootfiles/{_CNS}rootfile").get("full-path")
-        opf = ElementTree.fromstring(zf.read(rootfile))
+        opf = ElementTree.fromstring(budget.read(zf, rootfile))
     except (KeyError, AttributeError, ElementTree.ParseError):
         return "", []
 
@@ -52,9 +54,10 @@ def _spine_hrefs(zf: zipfile.ZipFile) -> tuple:
 
 
 def extract_epub(payload: bytes, doc_name: str) -> str:
+    budget = Budget(payload)
     with zipfile.ZipFile(io.BytesIO(payload)) as zf:
         names = zf.namelist()
-        title, hrefs = _spine_hrefs(zf)
+        title, hrefs = _spine_hrefs(zf, budget)
         if not hrefs:
             hrefs = sorted(n for n in names
                            if n.lower().endswith((".xhtml", ".html", ".htm")))
@@ -63,7 +66,7 @@ def extract_epub(payload: bytes, doc_name: str) -> str:
         for href in hrefs:
             if href not in names:
                 continue
-            chapter_md = html_to_markdown(zf.read(href))
+            chapter_md = html_to_markdown(budget.read(zf, href))
             if chapter_md.strip():
                 parts.append(chapter_md.strip())
     return "\n\n".join(parts)

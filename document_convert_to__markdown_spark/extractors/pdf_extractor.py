@@ -10,9 +10,11 @@ Scope: classic-xref PDFs with ``N 0 obj``/``endobj`` bodies, page trees,
 Flate or raw content streams, text shown via Tj / TJ / ' / " inside
 BT..ET with Td/TD/Tm/T* positioning, and image XObjects drawn via Do.
 That covers the corpus our deterministic synthesizer emits plus common
-simple generators.  Inflated stream bytes count against a per-document
-budget; past it the document fails with ``DecompressionLimit`` instead of
-expanding without bound.  Reading order: spans sorted by (page, -y, x, seq);
+simple generators.  ``/FlateDecode`` streams inflate through
+``bounded.Budget``: every inflated byte counts against one per-document
+budget, past which the document fails with ``DecompressionLimit`` instead
+of expanding without bound; a corrupt or truncated stream reads as no
+bytes.  Reading order: spans sorted by (page, -y, x, seq);
 spans sharing a baseline (|Δy| ≤ 2) join into one line with spaces.
 
 Per-page text blocks are joined with blank lines; the result then runs
@@ -26,26 +28,15 @@ the ``pix.n - pix.alpha >= 4`` guard at ``:457``).
 from __future__ import annotations
 
 import re
-import zlib
 from typing import Any, NamedTuple
+
+from .bounded import Budget
 
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b", re.DOTALL)
 _STREAM_RE = re.compile(rb"stream\r?\n")
 _NAME_RE = re.compile(rb"/([A-Za-z0-9_.#+-]+)")
 _REF_RE = re.compile(rb"(\d+)\s+(\d+)\s+R\b")
 _NUM_RE = re.compile(rb"[+-]?\d*\.?\d+")
-
-# Per-document /FlateDecode expansion budget: every inflated byte of every
-# stream counts against min(ratio x payload, ceiling).  zlib reaches
-# ~1000:1, so without it a PDF under the 100 MB gate could inflate to
-# ~100 GB inside one worker.
-INFLATE_RATIO = 100
-INFLATE_CEILING = 256 * 1024 * 1024
-
-
-class DecompressionLimit(Exception):
-    """A document's streams inflate past its expansion budget."""
-
 
 class Ref(NamedTuple):
     num: int
@@ -183,8 +174,7 @@ class _PdfObjects:
     def __init__(self, payload: bytes):
         self.payload = payload
         self.objects: dict[int, tuple[dict, bytes | None]] = {}
-        self.inflate_budget = min(INFLATE_RATIO * len(payload), INFLATE_CEILING)
-        self.inflate_left = self.inflate_budget
+        self.budget = Budget(payload)
         self._scan()
 
     def _scan(self):
@@ -252,29 +242,10 @@ class _PdfObjects:
         data = raw
         for f in filters:
             if f == "/FlateDecode":
-                data = self._inflate(data)
+                data = self.budget.inflate(data)
                 if data is None:
                     return None
         return data
-
-    def _inflate(self, data: bytes) -> bytes | None:
-        """``zlib.decompress`` that stops one byte past the budget left.
-
-        ``None`` for a corrupt or truncated stream, as ``zlib.decompress``
-        raising ``zlib.error`` gave; trailing bytes after the stream's end
-        are ignored, as there.
-        """
-        inflater = zlib.decompressobj()
-        try:
-            out = inflater.decompress(data, self.inflate_left + 1)
-        except zlib.error:
-            return None
-        if len(out) > self.inflate_left:
-            raise DecompressionLimit(
-                f"/FlateDecode output passes the {self.inflate_budget}-byte "
-                f"budget of a {len(self.payload)}-byte document")
-        self.inflate_left -= len(out)
-        return out if inflater.eof else None
 
 
 # --- content stream text extraction ---------------------------------------

@@ -48,7 +48,8 @@ libpng-written PNGs decode here pixel-exactly.
 Pure Python per-row filter loops are fine here: scanlines are
 sequential by definition (each byte depends on the previous), and the
 Up filter — the only whole-row-parallel one — uses numpy.  Decode
-speed is bounded by ``zlib.decompress`` for real images.
+speed is bounded by the IDAT inflate (``bounded.inflate``) for real
+images.
 """
 
 from __future__ import annotations
@@ -57,6 +58,8 @@ import struct
 import zlib
 
 import numpy as np
+
+from .bounded import inflate
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -237,10 +240,7 @@ def decode_png(payload: bytes) -> tuple[np.ndarray, str]:
         # decompress with the output CAPPED at the size the header
         # promises — a decompression bomb stops at `expected` bytes
         # instead of materializing its full expansion
-        d = zlib.decompressobj()
-        raw = d.decompress(b"".join(idat), expected)
-        while len(raw) < expected and d.unconsumed_tail:
-            raw += d.decompress(d.unconsumed_tail, expected - len(raw))
+        raw = inflate(b"".join(idat), expected)[0]
     except zlib.error as exc:
         # zlib.error subclasses Exception, NOT ValueError — without
         # this wrap one corrupt IDAT kills the whole Arrow batch task

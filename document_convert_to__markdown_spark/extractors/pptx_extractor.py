@@ -22,6 +22,8 @@ import zipfile
 from typing import NamedTuple
 from xml.etree import ElementTree
 
+from .bounded import Budget
+
 _P = "{http://schemas.openxmlformats.org/presentationml/2006/main}"
 _A = "{http://schemas.openxmlformats.org/drawingml/2006/main}"
 
@@ -53,6 +55,7 @@ def _shape_paragraphs(sp) -> list:
 
 def extract_pptx(payload: bytes, doc_name: str) -> PptxResult:
     """PPTX bytes → (markdown, extracted media)."""
+    budget = Budget(payload)
     with zipfile.ZipFile(io.BytesIO(payload)) as zf:
         names = zf.namelist()
 
@@ -69,7 +72,7 @@ def extract_pptx(payload: bytes, doc_name: str) -> PptxResult:
         for num, member in slide_members:
             parts.append(f"<!-- Slide number: {num} -->")
             try:
-                root = ElementTree.fromstring(zf.read(member))
+                root = ElementTree.fromstring(budget.read(zf, member))
             except ElementTree.ParseError:
                 continue
             for sp in root.iter(f"{_P}sp"):
@@ -90,7 +93,8 @@ def extract_pptx(payload: bytes, doc_name: str) -> PptxResult:
             if ext not in _IMG_EXTS:
                 continue
             filename = f"image_{counter:03d}{ext}"
-            images.append((name.rsplit("/", 1)[-1], filename, zf.read(name)))
+            images.append((name.rsplit("/", 1)[-1], filename,
+                           budget.read(zf, name)))
             counter += 1
 
     return PptxResult("\n\n".join(parts), images)

@@ -14,6 +14,8 @@ import io
 import json
 import zipfile
 
+from .bounded import read_member
+
 # Format labels (the `format` column of the result schema).
 FMT_HTML = "html"
 FMT_PDF = "pdf"
@@ -62,6 +64,11 @@ _HTML_MARKERS = (
 )
 
 
+# An EPUB's ``mimetype`` member is ``application/epub+zip``: no more of
+# it than this is read.
+_MIMETYPE_CAP = 256
+
+
 def _sniff_zip(payload: bytes) -> str:
     """Distinguish OOXML container types by member listing.
 
@@ -71,21 +78,20 @@ def _sniff_zip(payload: bytes) -> str:
     try:
         with zipfile.ZipFile(io.BytesIO(payload)) as zf:
             names = set(zf.namelist())
+            if "word/document.xml" in names:
+                return FMT_DOCX
+            if "xl/workbook.xml" in names:
+                return FMT_XLSX
+            if "ppt/presentation.xml" in names:
+                return FMT_PPTX
+            if "mimetype" in names:
+                try:
+                    if b"epub" in read_member(zf, "mimetype", _MIMETYPE_CAP):
+                        return FMT_EPUB
+                except Exception:  # noqa: BLE001 — sniffing never raises
+                    pass
     except (zipfile.BadZipFile, OSError, ValueError):
         return FMT_UNKNOWN
-    if "word/document.xml" in names:
-        return FMT_DOCX
-    if "xl/workbook.xml" in names:
-        return FMT_XLSX
-    if "ppt/presentation.xml" in names:
-        return FMT_PPTX
-    if "mimetype" in names:
-        try:
-            with zipfile.ZipFile(io.BytesIO(payload)) as zf2:
-                if b"epub" in zf2.read("mimetype"):
-                    return FMT_EPUB
-        except (KeyError, zipfile.BadZipFile, OSError):
-            pass
     if "META-INF/container.xml" in names:
         return FMT_EPUB
     if "[Content_Types].xml" in names:

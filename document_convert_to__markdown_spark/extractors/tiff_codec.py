@@ -59,6 +59,7 @@ import zlib
 
 import numpy as np
 
+from .bounded import inflate
 from .jpeg_codec import decode_jpeg, encode_jpeg
 
 TIFF_SIGS = (b"II*\x00", b"MM\x00*")
@@ -254,14 +255,6 @@ def _packbits_encode(data: bytes) -> bytes:
             i += 1
         out += bytes([i - lit - 1]) + data[lit:i]
     return bytes(out)
-
-
-def _inflate_capped(data: bytes, max_out: int) -> bytes:
-    d = zlib.decompressobj()
-    raw = d.decompress(data, max_out)
-    while len(raw) < max_out and d.unconsumed_tail:
-        raw += d.decompress(d.unconsumed_tail, max_out - len(raw))
-    return raw
 
 
 def _split_jpeg_segments(
@@ -502,7 +495,7 @@ def _unit_bytes(payload: bytes, comp: int, off: int, cnt: int,
         dec = _packbits_decode(chunk, need)
     else:                                       # 8 / 32946: deflate
         try:
-            dec = _inflate_capped(chunk, need)
+            dec = inflate(chunk, need)[0]
         except zlib.error as exc:
             raise ValueError(
                 f"corrupt TIFF deflate strip: {exc}") from None

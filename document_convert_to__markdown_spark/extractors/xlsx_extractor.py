@@ -14,6 +14,8 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
+from .bounded import Budget
+
 S_NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 PR_NS = "{http://schemas.openxmlformats.org/package/2006/relationships}"
 _CELL_REF = re.compile(r"([A-Z]+)(\d+)")
@@ -27,9 +29,9 @@ def _col_index(ref: str) -> int:
     return idx - 1
 
 
-def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
+def _shared_strings(zf: zipfile.ZipFile, budget: Budget) -> list[str]:
     try:
-        data = zf.read("xl/sharedStrings.xml")
+        data = budget.read(zf, "xl/sharedStrings.xml")
     except KeyError:
         return []
     try:
@@ -42,15 +44,17 @@ def _shared_strings(zf: zipfile.ZipFile) -> list[str]:
     return strings
 
 
-def _sheet_names(zf: zipfile.ZipFile) -> list[tuple[str, str]]:
+def _sheet_names(zf: zipfile.ZipFile,
+                 budget: Budget) -> list[tuple[str, str]]:
     """[(sheet name, member path)] in workbook order."""
     try:
-        wb = ET.fromstring(zf.read("xl/workbook.xml"))
+        wb = ET.fromstring(budget.read(zf, "xl/workbook.xml"))
     except (KeyError, ET.ParseError):
         return []
     rels: dict[str, str] = {}
     try:
-        rel_root = ET.fromstring(zf.read("xl/_rels/workbook.xml.rels"))
+        rel_root = ET.fromstring(
+            budget.read(zf, "xl/_rels/workbook.xml.rels"))
         for rel in rel_root:
             rels[rel.get("Id", "")] = "xl/" + rel.get("Target", "").lstrip("/")
     except (KeyError, ET.ParseError):
@@ -117,14 +121,15 @@ def _sheet_rows(data: bytes, shared: list[str]) -> list[list[str]]:
 
 def extract_xlsx(payload: bytes, doc_name: str) -> str:
     """XLSX bytes → markdown: '# {doc}' then '## {sheet}' pipe tables."""
+    budget = Budget(payload)
     with zipfile.ZipFile(io.BytesIO(payload)) as zf:
-        shared = _shared_strings(zf)
-        sheets = _sheet_names(zf)
+        shared = _shared_strings(zf, budget)
+        sheets = _sheet_names(zf, budget)
 
         markdown = f"# {doc_name}\n"
         for name, member in sheets:
             try:
-                rows = _sheet_rows(zf.read(member), shared)
+                rows = _sheet_rows(budget.read(zf, member), shared)
             except KeyError:
                 continue
             # XLSX_CONFIG['sheet_separator'] = '\n\n## ' (config.py:104)

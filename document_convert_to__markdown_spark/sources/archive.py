@@ -17,7 +17,8 @@ directions of that contract:
   returning the shard manifest as a DataFrame.
 
 Scale shape: one archive = one ``binaryFile`` row = one task (same
-contract as `sources/warc.py:311` — the Common Crawl work-unit rule);
+contract as ``warc.read_warc_pages`` — the Common Crawl work-unit
+rule);
 member explosion runs inside an Arrow-batched ``mapInPandas``, so no
 shuffle stands between the file scan and extraction.  The packer is
 the mirror image: ``repartitionByRange`` on the sort key gives every
@@ -27,12 +28,15 @@ single-partition window, shard count grows linearly with input and
 task parallelism is preserved at any scale (exactly how parquet
 writers bound file sizes).
 
-Safety rails mirror the WARC reader's (review r2 lineage):
+Safety rails (review r2 lineage); every inflate goes through
+``extractors/bounded.py``, the WARC and wiki readers' decoder too:
 - per-archive decompression ceiling (``MAX_DECOMPRESSED_BYTES``)
-  stops gzip/deflate bombs;
+  stops gzip/bz2/xz/deflate bombs;
 - per-member size gate (``MAX_MEMBER_BYTES``, the engine's intended
   100 MB A2 rule) emits blob-free ``skipped_too_large`` rows —
-  never a silent drop;
+  never a silent drop; a zip member is also read capped, and only
+  if stored or deflate (zipfile inflates bzip2 / lzma members
+  without a limit);
 - corrupt archives salvage every member decoded before the damage
   (tar is streamed member-by-member; zip's central directory makes
   a damaged tail recoverable per-member too) and always emit at
@@ -68,17 +72,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-# Per-archive decompression ceiling (gzip-bomb rail; same rationale as
-# warc.MAX_DECOMPRESSED_BYTES — bundles are ~1 GB compressed at most).
+from ..extractors.bounded import decompress_chunks, read_member
+
+# Per-archive decompression ceiling (bomb rail, as for a WARC file:
+# bundles are ~1 GB compressed at most).
 MAX_DECOMPRESSED_BYTES = 8 << 30
 
 # Per-member gate: the engine's intended A2 rule (100 MB), applied to
 # the *declared* member size before any bytes are inflated.
 MAX_MEMBER_BYTES = 100 * 1024 * 1024
 
-_GZ_MAGIC = b"\x1f\x8b"
-_BZ2_MAGIC = b"BZh"
-_XZ_MAGIC = b"\xfd7zXZ\x00"
+_COMPRESSED_TARS = (("gzip", b"\x1f\x8b"), ("bz2", b"BZh"),
+                    ("xz", b"\xfd7zXZ\x00"))
 _ZIP_MAGICS = (b"PK\x03\x04", b"PK\x05\x06", b"PK\x07\x08")
 
 ARCHIVE_DOCS_SCHEMA = StructType([
@@ -152,32 +157,20 @@ def iter_archive_members(
 
     Detection nuance: for *uncompressed* tar, a silently-swallowed bad
     header (tarfile treats it as EOF) is caught by checking for
-    non-NUL residue past the stop offset.  For ``.tar.gz`` the gzip
-    layer itself truncates at damage (the shared WARC bomb rail's
+    non-NUL residue past the stop offset.  For compressed tars the
+    decoder itself truncates at damage (``decompress_chunks``'
     salvage), which tarfile then sees as a short read — surfacing as
     ``failed_member`` or a salvage break; only block-aligned inner
     corruption that decompresses cleanly can pass undetected there.
     """
     try:
-        if blob[:2] == _GZ_MAGIC:
-            from .warc import _iter_decompressed_chunks
-
-            peek = _ChunkReader(_iter_decompressed_chunks(
-                blob, max_bytes=max_total_bytes))
-            yield from _iter_tar(peek, max_member_bytes, max_total_bytes)
-            return
-        if blob[:3] == _BZ2_MAGIC:
-            from .wikidump import _iter_bz2_chunks
-
-            peek = _ChunkReader(_iter_bz2_chunks(
-                blob, max_bytes=max_total_bytes))
-            yield from _iter_tar(peek, max_member_bytes, max_total_bytes)
-            return
-        if blob[:6] == _XZ_MAGIC:
-            peek = _ChunkReader(_iter_xz_chunks(
-                blob, max_bytes=max_total_bytes))
-            yield from _iter_tar(peek, max_member_bytes, max_total_bytes)
-            return
+        for codec, magic in _COMPRESSED_TARS:
+            if blob.startswith(magic):
+                peek = _ChunkReader(decompress_chunks(codec, blob,
+                                                      max_total_bytes))
+                yield from _iter_tar(peek, max_member_bytes,
+                                     max_total_bytes)
+                return
         if blob[:4] in _ZIP_MAGICS:
             yield from _iter_zip(blob, max_member_bytes, max_total_bytes)
             return
@@ -185,53 +178,6 @@ def iter_archive_members(
                              max_total_bytes, raw=blob)
     except Exception as exc:                       # noqa: BLE001
         yield None, None, None, f"failed_archive:{type(exc).__name__}"
-
-
-def _iter_xz_chunks(data: bytes,
-                    max_bytes: int = MAX_DECOMPRESSED_BYTES):
-    """Capped streaming xz inflate (stdlib lzma), same rails as the
-    gzip/bz2 chunkers: bounded feed, output ceiling, corrupt-tail
-    salvage, multistream concatenation."""
-    import lzma
-
-    mv = memoryview(data)
-    n = len(data)
-    feed = 0
-    total = 0
-    d = lzma.LZMADecompressor(format=lzma.FORMAT_XZ)
-    pending = None
-    try:
-        while True:
-            if pending is None:
-                if feed >= n:
-                    break
-                nxt = min(feed + _XZ_CHUNK, n)
-                pending = bytes(mv[feed:nxt])
-                feed = nxt
-            out = d.decompress(pending, max_length=_XZ_CHUNK)
-            pending = None
-            if out:
-                total += len(out)
-                if total > max_bytes:
-                    yield out[:len(out) - (total - max_bytes)]
-                    return
-                yield out
-            if d.eof:
-                rest = d.unused_data
-                d = lzma.LZMADecompressor(format=lzma.FORMAT_XZ)
-                if rest:
-                    if rest[:6] != _XZ_MAGIC:
-                        return
-                    pending = rest
-                elif feed >= n:
-                    break
-            elif not d.needs_input:
-                pending = b""
-    except (lzma.LZMAError, EOFError, ValueError):
-        return                          # salvage prefix
-
-
-_XZ_CHUNK = 1 << 20
 
 
 def _iter_zip(blob: bytes, max_member_bytes: int, max_total_bytes: int):
@@ -252,15 +198,19 @@ def _iter_zip(blob: bytes, max_member_bytes: int, max_total_bytes: int):
             # member is never inflated (zip-bomb rail + A2 gate).
             yield info.filename, None, info.file_size, "skipped_too_large"
             continue
-        if total + info.file_size > max_total_bytes:
+        left = max_total_bytes - total
+        if info.file_size > left:
             yield None, None, None, "failed_archive_ceiling"
             return
         try:
-            data = zf.read(info)
-            total += len(data)
-            yield info.filename, data, len(data), "ok"
+            # read capped too; a bzip2 / lzma member, which zipfile
+            # inflates without a limit, is refused as failed_member
+            data = read_member(zf, info, min(max_member_bytes, left))
         except Exception:                          # noqa: BLE001
             yield info.filename, None, info.file_size, "failed_member"
+            continue
+        total += len(data)
+        yield info.filename, data, len(data), "ok"
     if n == 0:
         yield None, None, None, "skipped_empty_archive"
 

@@ -5,8 +5,8 @@ unit of storage is the ~1 GB gzipped WARC file.  This module provides
 
 - a from-scratch, dependency-free WARC record parser (``iter_records``)
   for plain or gzip-compressed archives (including the per-record-member
-  gzip framing Common Crawl uses — Python's ``gzip`` transparently
-  concatenates members);
+  gzip framing Common Crawl uses — ``extractors/bounded.py`` follows
+  concatenated members, under ``MAX_DECOMPRESSED_BYTES``);
 - ``read_warc_pages(spark, path_glob)``: a Spark reader that turns a
   directory of WARC files into the standard pages relation
   (url, warc_ts, html, text, lang) ready for ``run_extraction``;
@@ -33,6 +33,8 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Iterator, Optional
 
+from ..extractors.bounded import decompress_chunks
+
 CRLF = b"\r\n"
 
 
@@ -57,93 +59,20 @@ def _parse_headers(block: bytes) -> dict:
 
 # Decompression ceiling per archive: Common Crawl WARCs are ~1 GB
 # compressed / ~4-5 GB raw.  A crafted gzip bomb would otherwise expand
-# without bound inside the executor (review r2).
+# without bound inside the executor (review r2).  Past it, and at a
+# corrupt or truncated member, the records already inflated are kept.
 MAX_DECOMPRESSED_BYTES = 8 << 30
 
-# Streaming granularity: decompressed bytes are produced and consumed in
-# chunks of this size so the full raw archive (~4-5 GB for a real CC
-# file) is never materialized in one task (VERDICT r2 next-round #7).
+# Streaming granularity of plain archives, the size of the chunks
+# ``decompress_chunks`` yields for gzip ones: the full raw archive (~4-5
+# GB for a real CC file) is never materialized in one task (VERDICT r2
+# next-round #7).
 _CHUNK = 1 << 20
 
 # A WARC header block larger than this is not a header block; stop
 # buffering rather than accumulate the whole archive looking for the
 # terminating blank line.
 _MAX_HEADER_BYTES = 1 << 20
-
-
-def _iter_decompressed_chunks(data: bytes,
-                              max_bytes: int = MAX_DECOMPRESSED_BYTES,
-                              ) -> Iterator[bytes]:
-    """Stream a (possibly multi-member) gzip archive as ~1 MB chunks.
-
-    Salvage semantics: a truncated or corrupt member ends iteration,
-    keeping everything decoded before it (crawl segments do arrive cut
-    off, and one bad tail must not lose the records before it).  Total
-    output is capped at ``max_bytes`` (a gzip bomb must not OOM the
-    executor).  Input is fed through a ``memoryview`` in bounded slices
-    so neither the compressed tail nor the decompressed archive is ever
-    copied wholesale — per-member ``data[pos:]`` copies would be
-    quadratic on Common Crawl's one-member-per-record framing.
-    """
-    import zlib
-
-    mv = memoryview(data)
-    total, feed, n = 0, 0, len(data)
-    # Input sliced past the previous member's end is carried into the
-    # next member instead of being re-sliced from ``mv``: on Common
-    # Crawl's one-member-per-record framing, re-feeding from the source
-    # would copy each byte ~(_CHUNK / member size) times (review r3).
-    # With the carry, every input byte is sliced exactly once.
-    carry = b""
-    while True:
-        if len(carry) < 2 and feed < n:
-            take = 2 - len(carry)
-            carry += bytes(mv[feed:feed + take])
-            feed += take
-        if len(carry) < 2 or carry[:2] != b"\x1f\x8b":
-            return  # no further member (or trailing garbage)
-        d = zlib.decompressobj(wbits=31)
-        try:
-            while not d.eof:
-                if d.unconsumed_tail:
-                    src = d.unconsumed_tail
-                elif carry:
-                    src, carry = carry, b""
-                elif feed < n:
-                    nxt = min(feed + _CHUNK, n)
-                    src = mv[feed:nxt]
-                    feed = nxt
-                else:
-                    return  # truncated final member: keep what streamed
-                chunk = d.decompress(src, _CHUNK)
-                if chunk:
-                    if total + len(chunk) >= max_bytes:
-                        yield chunk[:max_bytes - total]
-                        return  # ceiling hit: drop the rest
-                    total += len(chunk)
-                    yield chunk
-        except zlib.error:
-            return  # corrupt member: keep what already streamed
-        # Capture the leftover input BEFORE flush(): flush() shuffles
-        # unconsumed_tail into unused_data again, and at eof the two
-        # alias the same bytes — reading after flush doubles the carry
-        # at every member boundary (exponential blowup on multi-member
-        # archives).
-        carry = d.unused_data  # leftover input starts the next member
-        tail = d.flush()
-        if tail:
-            yield tail[:max_bytes - total]
-            total += len(tail)
-            if total >= max_bytes:
-                return
-
-
-def _decompress_salvage(data: bytes,
-                        max_bytes: int = MAX_DECOMPRESSED_BYTES) -> bytes:
-    """Materialized form of ``_iter_decompressed_chunks`` (tests /
-    small-archive callers).  Production parsing goes through the chunk
-    stream and never builds this string."""
-    return b"".join(_iter_decompressed_chunks(data, max_bytes))
 
 
 def _iter_records_from_chunks(chunks) -> Iterator[WarcRecord]:
@@ -222,7 +151,8 @@ def iter_records(data: bytes) -> Iterator[WarcRecord]:
     join it (VERDICT r2 #7).
     """
     if data[:2] == b"\x1f\x8b":
-        chunks: Iterator[bytes] = _iter_decompressed_chunks(data)
+        chunks: Iterator[bytes] = decompress_chunks(
+            "gzip", data, MAX_DECOMPRESSED_BYTES)
     else:
         # Slice plain archives too: feeding the whole blob as one chunk
         # would make the framing buffer O(archive), and its per-record

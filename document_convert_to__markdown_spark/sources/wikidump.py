@@ -14,8 +14,9 @@ this module mirrors the engine's WARC/CDX design point for point:
   file = one ``binaryFile`` row = one task (enwiki ships as one ~20 GB
   file or per-range parts; parts are the parallel unit), pages
   exploded by an Arrow-batched ``mapInPandas`` running a streaming
-  bz2 decode (bounded chunks, decompression ceiling) + incremental
-  ``<page>`` scan — the raw ~90 GB XML never materializes.
+  bz2 decode (``extractors/bounded.py``: 1 MiB chunks, decompression
+  ceiling) + incremental ``<page>`` scan — the raw ~90 GB XML never
+  materializes.
 - ``read_multistream_index(spark, path)``: the index as a relation —
   ``spark.read.text`` (Hadoop inflates ``.bz2`` transparently) +
   ``split(limit 3)`` — all JVM-side, malformed lines surface as
@@ -35,7 +36,8 @@ Page grammar (the subset every dump carries): ``<title>``, ``<ns>``,
 ``<timestamp>`` and ``<text>``.  Articles are wikitext — pair with
 ``extractors/wikitext.py:wikitext_to_markdown`` for the curation
 chain.  Never raises on damaged input: a corrupt stream salvages
-every page decoded before it (same contract as the WARC reader).
+every page decoded before it (the WARC reader's decoder, so the same
+contract).
 
 Format references (public): the MediaWiki XML export schema
 (meta.wikimedia.org/wiki/Data_dumps), bz2 stream format (the
@@ -57,6 +59,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..extractors.bounded import decompress_chunks
+
 # Ceiling on decompressed bytes per dump-file task (a crafted bz2 bomb
 # must cost the file, not the executor) — enwiki's full XML is ~90 GB
 # but arrives as many independent streams; the per-task unit is a part
@@ -68,10 +72,6 @@ MAX_DECOMPRESSED_BYTES = 32 << 30
 # read at most this much past the stream offset).
 MAX_STREAM_BYTES = 64 << 20
 
-_CHUNK = 1 << 20
-
-_BZ2_MAGIC = b"BZh"
-
 WIKI_PAGES_SCHEMA = StructType([
     StructField("url", StringType(), False),
     StructField("title", StringType(), True),
@@ -82,54 +82,6 @@ WIKI_PAGES_SCHEMA = StructType([
     StructField("text", StringType(), True),
     StructField("status", StringType(), False),
 ])
-
-
-def _iter_bz2_chunks(data: bytes,
-                     max_bytes: int = MAX_DECOMPRESSED_BYTES,
-                     ) -> Iterator[bytes]:
-    """Stream a (possibly multistream) bz2 blob as bounded chunks.
-
-    Salvage semantics: a truncated or corrupt stream ends iteration,
-    keeping everything decoded before it; total output is capped at
-    ``max_bytes``.  Input is fed in bounded slices via ``memoryview``
-    so neither side is ever copied wholesale (the same rails as the
-    WARC gzip chunker, `sources/warc.py:74`).
-    """
-    mv = memoryview(data)
-    n = len(data)
-    feed = 0
-    total = 0
-    d = bz2.BZ2Decompressor()
-    pending: Optional[bytes] = None
-    try:
-        while True:
-            if pending is None:
-                if feed >= n:
-                    break
-                nxt = min(feed + _CHUNK, n)
-                pending = bytes(mv[feed:nxt])
-                feed = nxt
-            out = d.decompress(pending, max_length=_CHUNK)
-            pending = None
-            if out:
-                total += len(out)
-                if total > max_bytes:
-                    yield out[:len(out) - (total - max_bytes)]
-                    return
-                yield out
-            if d.eof:
-                rest = d.unused_data
-                d = bz2.BZ2Decompressor()
-                if rest:
-                    if rest[:3] != _BZ2_MAGIC:
-                        return          # trailing garbage: stop cleanly
-                    pending = rest
-                elif feed >= n:
-                    break
-            elif not d.needs_input:
-                pending = b""           # more output buffered inside
-    except (OSError, EOFError, ValueError):
-        return                          # salvage prefix
 
 
 def _parse_page(fragment: bytes) -> Optional[tuple]:
@@ -233,7 +185,8 @@ def _explode_dump_blobs(batches):
         for blob in pdf["content"]:
             n_seen = 0
             for t, ns, pid, red, ts, text, status in iter_dump_pages(
-                    _iter_bz2_chunks(bytes(blob))):
+                    decompress_chunks("bz2", bytes(blob),
+                                      MAX_DECOMPRESSED_BYTES)):
                 rows.append((_wiki_url(t), t, ns, pid, red, ts, text,
                              status))
                 n_seen += 1
@@ -323,45 +276,15 @@ def fetch_pages_by_index(spark, wanted, dump_path: str,
                 for offset, ids in sorted(grouped.items()):
                     fh.seek(int(offset))
                     blob = fh.read(max_stream_bytes)
-                    d = bz2.BZ2Decompressor()
-
-                    def one_stream(blob=blob, d=d,
-                                   cap=MAX_DECOMPRESSED_BYTES):
-                        # same bomb rail + feed pattern as the
-                        # full-scan chunker: a crafted stream must
-                        # cost the fetch, not the executor (round-5
-                        # review finding); stops at the stream's own
-                        # end marker (d.eof)
-                        pos = 0
-                        total = 0
-                        pending = None
-                        while not d.eof:
-                            if pending is None:
-                                if pos >= len(blob):
-                                    break
-                                pending = blob[pos:pos + _CHUNK]
-                                pos += _CHUNK
-                            out = d.decompress(pending,
-                                               max_length=_CHUNK)
-                            pending = None
-                            if out:
-                                total += len(out)
-                                if total > cap:
-                                    return
-                                yield out
-                            if not d.eof and not d.needs_input:
-                                pending = b""
-
                     missing = set(ids)
-                    try:
-                        for t, ns, pid, red, ts, text, status in \
-                                iter_dump_pages(one_stream()):
-                            if pid in ids:
-                                missing.discard(pid)
-                                rows.append((_wiki_url(t), t, ns, pid,
-                                             red, ts, text, status))
-                    except OSError:
-                        pass
+                    for t, ns, pid, red, ts, text, status in \
+                            iter_dump_pages(decompress_chunks(
+                                "bz2", blob, MAX_DECOMPRESSED_BYTES,
+                                multi=False)):
+                        if pid in ids:
+                            missing.discard(pid)
+                            rows.append((_wiki_url(t), t, ns, pid,
+                                         red, ts, text, status))
                     # a wanted page the stream failed to produce is
                     # accounted, never silently absent (round-5
                     # review finding)

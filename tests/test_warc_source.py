@@ -147,8 +147,8 @@ def test_gzip_bomb_capped():
     import gzip as _gz
     import io
 
-    from document_convert_to__markdown_spark.sources.warc import (
-        _decompress_salvage,
+    from document_convert_to__markdown_spark.extractors.bounded import (
+        decompress_chunks,
     )
 
     ok = io.BytesIO()
@@ -156,7 +156,7 @@ def test_gzip_bomb_capped():
     bomb = _gz.compress(b"\x00" * (64 << 20), mtime=0)  # 64MB from ~64KB
     data = ok.getvalue() + bomb
 
-    out = _decompress_salvage(data, max_bytes=1 << 20)
+    out = b"".join(decompress_chunks("gzip", data, 1 << 20))
     assert len(out) < (2 << 20)  # bomb not expanded past the ceiling
     # end-to-end: the capped archive still yields the good record
     got = list(responses_from_warc(data))

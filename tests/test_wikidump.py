@@ -5,11 +5,14 @@ import bz2
 
 import pytest
 
+from document_convert_to__markdown_spark.extractors.bounded import (
+    decompress_chunks,
+)
 from document_convert_to__markdown_spark.extractors.wikitext import (
     wikitext_to_markdown,
 )
 from document_convert_to__markdown_spark.sources.wikidump import (
-    _iter_bz2_chunks,
+    MAX_DECOMPRESSED_BYTES,
     build_wikidump,
     fetch_pages_by_index,
     iter_dump_pages,
@@ -25,10 +28,15 @@ ROWS.append(("Redir", 0, 501, "2020-01-02T03:04:05Z",
              "#REDIRECT [[Doc 0]]", "Doc 0"))
 
 
+def _bz2_chunks(data):
+    """The dump scan's decode: multistream, under the per-file ceiling."""
+    return decompress_chunks("bz2", data, MAX_DECOMPRESSED_BYTES)
+
+
 class TestPureParse:
     def test_build_parse_roundtrip(self):
         dump, index = build_wikidump(ROWS, pages_per_stream=2)
-        pages = list(iter_dump_pages(_iter_bz2_chunks(dump)))
+        pages = list(iter_dump_pages(_bz2_chunks(dump)))
         assert len(pages) == len(ROWS)
         by_title = {p[0]: p for p in pages}
         assert by_title["Doc 3"][5] == ROWS[3][4]
@@ -43,8 +51,7 @@ class TestPureParse:
 
     def test_truncated_dump_salvages_prefix(self):
         dump, _ = build_wikidump(ROWS, pages_per_stream=2)
-        sal = list(iter_dump_pages(_iter_bz2_chunks(dump[:len(dump)
-                                                         * 2 // 3])))
+        sal = list(iter_dump_pages(_bz2_chunks(dump[:len(dump) * 2 // 3])))
         assert 0 < len(sal) < len(ROWS)
         assert all(p[6] == "ok" for p in sal)
 
@@ -52,15 +59,15 @@ class TestPureParse:
         dump, _ = build_wikidump(ROWS[:4], pages_per_stream=2)
         step = max(1, len(dump) // 80)
         for cut in range(0, len(dump), step):
-            list(iter_dump_pages(_iter_bz2_chunks(dump[:cut])))
+            list(iter_dump_pages(_bz2_chunks(dump[:cut])))
 
     def test_bomb_ceiling(self):
         big = bz2.compress(b"<x>" + b"\x00" * (1 << 20) + b"</x>")
-        out = b"".join(_iter_bz2_chunks(big, max_bytes=1000))
+        out = b"".join(decompress_chunks("bz2", big, 1000))
         assert len(out) == 1000
 
     def test_non_bz2_yields_nothing(self):
-        assert list(_iter_bz2_chunks(b"\xff" * 512)) == []
+        assert list(_bz2_chunks(b"\xff" * 512)) == []
 
 
 class TestSparkDump:
