@@ -35,8 +35,12 @@ from typing import Iterator
 INFLATE_RATIO = 100
 INFLATE_CEILING = 256 * 1024 * 1024
 
-# Output granularity of the streaming path, and its input slice size.
+# Output granularity of the streaming path.
 _CHUNK = 1 << 20
+# Its input slice size, never above _CHUNK: at a member's end the decoder
+# copies the rest of the slice into ``unused_data``, so on one-member-per-
+# record WARCs a 1 MiB slice would copy ~0.5 MiB per record.
+_SLICE = 1 << 16
 
 # codec -> (new decompressor, magic every member starts with)
 _CODECS = {
@@ -61,12 +65,13 @@ def decompress_chunks(codec: str, data: bytes, cap: int,
     ``multi`` follows concatenated members (WARC's member per record,
     multistream bz2, concatenated xz) until the input ends or the next
     member lacks the codec's magic; without it only the first member is
-    decoded (a point read of one stream).  Input is fed as ``memoryview``
-    slices, and the bytes sliced past a member's end are carried into the
-    next member rather than re-sliced, so every input byte is sliced
-    exactly once, however small the members.
+    decoded (a point read of one stream).  Input is fed as ≤64 KiB
+    ``memoryview`` slices, and the bytes sliced past a member's end are
+    carried into the next member rather than re-sliced, so every input
+    byte is sliced exactly once, however small the members.
     """
     new, magic = _CODECS[codec]
+    step = min(_SLICE, _CHUNK)
     mv = memoryview(data)
     n, feed, left = len(data), 0, cap
     carry = b""
@@ -86,7 +91,7 @@ def decompress_chunks(codec: str, data: bytes, cap: int,
                 elif carry:
                     src, carry = carry, b""
                 elif feed < n:
-                    src = mv[feed:feed + _CHUNK]
+                    src = mv[feed:feed + step]
                     feed += len(src)
                 else:
                     return          # truncated member: keep what streamed

@@ -67,9 +67,3 @@ def ngram_contamination(documents: DataFrame, benchmark: DataFrame,
         .agg(F.count("*").alias("n_contaminated_grams"))
     )
 
-
-def decontaminate(documents: DataFrame, benchmark: DataFrame,
-                  n: int = 13) -> DataFrame:
-    """The kept corpus: documents with no benchmark n-gram overlap."""
-    hits = ngram_contamination(documents, benchmark, n=n)
-    return documents.join(hits.select("doc_id"), "doc_id", "left_anti")

@@ -52,6 +52,9 @@ from pyspark.sql import functions as F
 
 from ..extractors.extract import (
     MAX_DOCUMENT_BYTES,
+    STATUS_FAILED,
+    STATUS_OK,
+    STATUSES,
     extract_document,
     too_large_document,
 )
@@ -60,6 +63,9 @@ from .session import prepare_python_worker
 
 # Documents larger than this route through the low-density giant path.
 DEFAULT_GIANT_THRESHOLD = 4 * 1024 * 1024  # 4 MB
+
+# Every EXTRACT_SCHEMA column null: doc and metrics rows fill in their own.
+_NULL_ROW = dict.fromkeys(EXTRACT_SCHEMA.names)
 
 
 def _drop_stale_temporary(spark: SparkSession, target: str) -> None:
@@ -94,11 +100,12 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     prepare_python_worker()
     from pyspark import TaskContext
 
-    m_docs = m_ok = m_failed = m_skipped = m_bytes = 0
+    m_bytes = 0
+    counts = dict.fromkeys(STATUSES, 0)
     t_part0 = time.perf_counter()
 
     def doc_row(url: str, payload, length: int) -> dict:
-        nonlocal m_docs, m_ok, m_failed, m_skipped, m_bytes
+        nonlocal m_bytes
         if payload is None and length:
             doc, elapsed_us, input_bytes = too_large_document(url), 0, length
         else:
@@ -108,17 +115,12 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
             elapsed_us = int((time.perf_counter() - t0) * 1e6)
             input_bytes = len(payload_bytes) if payload_bytes else 0
 
-        m_docs += 1
         m_bytes += input_bytes
-        if doc.status == "ok":
-            m_ok += 1
-        elif doc.status == "failed":
-            m_failed += 1
-        else:
-            m_skipped += 1
+        counts[doc.status] += 1
 
         md = doc.markdown
         return {
+            **_NULL_ROW,
             "kind": "doc",
             "url": doc.url,
             "doc_name": doc.doc_name,
@@ -136,9 +138,6 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
                 {"name": a.name, "page": a.page, "data": a.data}
                 for a in doc.assets
             ],
-            "partition_id": None,
-            "m_docs": None, "m_ok": None, "m_failed": None,
-            "m_skipped": None, "m_bytes": None, "m_elapsed_us": None,
         }
 
     for pdf in batches:
@@ -149,15 +148,14 @@ def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
 
     ctx = TaskContext.get()
     pid = ctx.partitionId() if ctx is not None else -1
+    m_docs = sum(counts.values())
+    m_ok, m_failed = counts[STATUS_OK], counts[STATUS_FAILED]
     yield pd.DataFrame([{
+        **_NULL_ROW,
         "kind": "metrics",
-        "url": None, "doc_name": None, "format": None, "status": None,
-        "error": None, "markdown": None, "md_sha256": None,
-        "n_images": None, "extractor_used": None,
-        "elapsed_us": None, "input_bytes": None, "assets": None,
         "partition_id": pid,
         "m_docs": m_docs, "m_ok": m_ok, "m_failed": m_failed,
-        "m_skipped": m_skipped, "m_bytes": m_bytes,
+        "m_skipped": m_docs - m_ok - m_failed, "m_bytes": m_bytes,
         "m_elapsed_us": int((time.perf_counter() - t_part0) * 1e6),
     }])
 
@@ -339,8 +337,6 @@ def run_extraction_resumable(
     from pyspark.sql import Observation
 
     obs = Observation("extract_counters")
-    statuses = ["ok", "failed", "skipped_empty", "skipped_unsupported",
-                "skipped_too_large"]
     # DISK_ONLY, not MEMORY_AND_DISK: the cached relation carries every
     # markdown/asset blob, and unrolling multi-MB rows into the columnar
     # storage-memory cache competes with Arrow/shuffle execution memory
@@ -350,7 +346,7 @@ def run_extraction_resumable(
     # sequentially per consuming action, never occupying storage memory.
     raw = plan.raw.observe(obs, *[
         F.sum(F.when(F.col("status") == s, 1).otherwise(0)).alias(s)
-        for s in statuses
+        for s in STATUSES
     ]).persist(StorageLevel.DISK_ONLY)
     try:
         out = _split(raw)

@@ -318,26 +318,6 @@ def read_archive_docs(spark, path_glob: str,
                              schema=ARCHIVE_DOCS_SCHEMA)
 
 
-def read_archive_docs_stream(spark, path_glob: str,
-                             path_glob_filter: str =
-                             "*.{zip,tar,tar.gz,tgz,tar.bz2,tbz2,tar.xz,txz}",
-                             max_files_per_trigger: Optional[int] = None):
-    """Streaming twin of ``read_archive_docs``: bundles dropped into a
-    directory become micro-batches (the same continuous-arrival shape
-    as ``read_warc_pages_stream`` — the stream checkpoint guarantees
-    each archive is exploded exactly once)."""
-    from .warc import BINARY_FILE_SCHEMA
-
-    reader = (spark.readStream.format("binaryFile")
-              .schema(BINARY_FILE_SCHEMA)
-              .option("pathGlobFilter", path_glob_filter))
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path_glob).select("path", "content")
-    return files.mapInPandas(_explode_archive_blobs,
-                             schema=ARCHIVE_DOCS_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Export half: deterministic size-bounded tar shards (WebDataset layout)
 # ---------------------------------------------------------------------------
@@ -345,8 +325,8 @@ def read_archive_docs_stream(spark, path_glob: str,
 def shard_member_name(url: str) -> str:
     """Deterministic, filesystem-safe, reversible member name for a url.
 
-    Percent-encoding keeps the mapping bijective (``member_url`` below
-    inverts it exactly), so a packed corpus round-trips through
+    Percent-encoding keeps the mapping bijective (``member_name_url``
+    below inverts it exactly), so a packed corpus round-trips through
     ``read_archive_docs`` with its original url keys intact.
     """
     return quote(url, safe="")

@@ -225,28 +225,3 @@ class TestSparkArchive:
             outs.append({f: open(os.path.join(out, f), "rb").read()
                          for f in sorted(os.listdir(out))})
         assert outs[0] == outs[1]
-
-
-def _drain(df, name):
-    q = (df.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    return df.sparkSession.table(name)
-
-
-class TestArchiveStream:
-    def test_stream_equals_batch(self, spark, tmp_path):
-        from document_convert_to__markdown_spark.sources.archive import (
-            read_archive_docs_stream,
-        )
-
-        (tmp_path / "one.zip").write_bytes(_zip_bytes(MEMBERS))
-        (tmp_path / "two.tar.gz").write_bytes(
-            _tar_bytes([("d.txt", b"D")], gz=True))
-        got = _drain(
-            read_archive_docs_stream(spark, str(tmp_path)),
-            "arch_stream_t")
-        batch = read_archive_docs(spark, str(tmp_path))
-        assert sorted(map(tuple, got.collect())) == \
-            sorted(map(tuple, batch.collect()))
-        assert got.count() == 4

@@ -5,8 +5,10 @@ import pytest
 
 from document_convert_to__markdown_spark.data import synth
 from document_convert_to__markdown_spark.extractors import (
+    extract,
     extract_document,
     sniff_format,
+    sniffer,
 )
 from document_convert_to__markdown_spark.extractors.docx_extractor import extract_docx
 from document_convert_to__markdown_spark.extractors.html_extractor import (
@@ -245,6 +247,34 @@ def test_extract_document_statuses():
     doc = extract_document("https://a.example/en/doc1", b"<html><body><p>hello world</p></body></html>")
     assert doc.status == "ok"
     assert "hello world" in doc.markdown
+
+
+# --- dispatch table: format -> converter ----------------------------------------
+
+def test_every_sniffed_format_has_one_converter():
+    names = [k for k in vars(sniffer) if k.startswith("FMT_")]
+    formats = {getattr(sniffer, k) for k in names}
+    assert len(formats) == len(names)          # no two constants share a value
+    assert set(extract.CONVERTERS) == formats - {sniffer.FMT_EMPTY,
+                                                 sniffer.FMT_UNKNOWN}
+
+
+def _boom(*_args, **_kwargs):
+    raise ValueError("boom: bad bytes")
+
+
+@pytest.mark.parametrize("where", ["converter", "cleanup"])
+def test_raise_in_converter_or_cleanup_is_a_failed_row(monkeypatch, where):
+    # a PNG: its converter returns one asset, which a failed row drops
+    url, payload = "https://a.example/img/pic.png", synth.make_png(4, 3, 90)
+    assert extract_document(url, payload).n_images == 1
+    if where == "converter":
+        monkeypatch.setitem(extract.CONVERTERS, sniffer.FMT_PNG, _boom)
+    else:
+        monkeypatch.setattr(extract, "clean_markdown_content", _boom)
+    doc = extract_document(url, payload)
+    assert doc == (url, doc_name_from_url(url), "png", "failed",
+                   "ValueError: boom: bad bytes", None, 0, "none", [])
 
 
 def test_extract_document_deterministic():

@@ -35,7 +35,7 @@ def test_malformed_xml_falls_back_to_fence():
 
 def test_truncated_wav_is_status_row_not_crash():
     doc = _extract(b"RIFF\x10\x00\x00\x00WAVEfmt ")
-    assert doc.status in ("ok", "skipped_unsupported", "failed")
+    assert doc.status == "skipped_unsupported"
     assert doc.format == "wav"
 
 
@@ -51,7 +51,7 @@ def test_mp3_sniff_and_metadata():
 def test_mp3_garbage_after_id3_is_status_row():
     doc = _extract(b"ID3\x04\x00\x00\x00\x00\x00\x00" + b"\x00" * 64)
     assert doc.format == "mp3"
-    assert doc.status in ("skipped_unsupported", "failed")
+    assert doc.status == "skipped_unsupported"
 
 
 def test_wav_meta_values():
@@ -133,7 +133,7 @@ def test_flac_extracts_metadata_markdown():
     assert "16 bit" in doc.markdown
     # malformed FLAC surfaces as a status row, never a crash
     bad = extract_document("https://a.example/x.flac", b"fLaC\x00\x00")
-    assert bad.status in ("skipped_unsupported", "failed")
+    assert bad.status == "skipped_unsupported"
 
 
 def test_aiff_extracts_metadata_markdown():
@@ -152,4 +152,4 @@ def test_aiff_extracts_metadata_markdown():
     assert "AIFF" in doc.markdown and "22050 Hz" in doc.markdown
     bad = extract_document("https://a.example/x.aiff",
                            b"FORM\x00\x00\x00\x04AIFF")
-    assert bad.status in ("skipped_unsupported", "failed")
+    assert bad.status == "skipped_unsupported"

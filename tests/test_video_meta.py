@@ -170,9 +170,14 @@ def test_sniffer_and_extract_document():
     assert doc2.status == "ok" and "V_VP9" in doc2.markdown
     doc3 = extract_document("http://v/c.ogg", ogg)
     assert doc3.status == "ok" and "vorbis" in doc3.markdown
-    # sniffed-as-video but unreadable: status row, never a drop
+    # cut to ten bytes it no longer sniffs as video: a status row, never
+    # a drop
     broken = extract_document("http://v/d.mp4", mp4[:10])
-    assert broken.status in ("ok", "skipped_unsupported")
+    assert (broken.format, broken.status) == ("unknown",
+                                              "skipped_unsupported")
+    # sniffed as video but unreadable: the converter's None is unsupported
+    cut = extract_document("http://v/e.mp4", mp4[:16])
+    assert (cut.format, cut.status) == ("mp4", "skipped_unsupported")
     assert broken.url == "http://v/d.mp4"
     # determinism
     assert extract_document("http://v/a.mp4", mp4) == doc
