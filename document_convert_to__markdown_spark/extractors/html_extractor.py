@@ -9,12 +9,14 @@ serializer (headings, tables, lists, code fences, links)".
 
 Three stages, all pure functions (UDF-safe, deterministic):
 
-1. ``parse_dom``      — tokenizes with the stdlib ``html.parser`` event
-   stream and builds a lightweight DOM tree (void elements, implied
-   closes for ``p``/``li``/``tr``/``td``).
+1. ``parse_dom``      — builds a lightweight DOM tree (void elements,
+   implied closes for ``p``/``li``/``tr``/``td``) inside one scanning
+   loop over clean HTML, and through the stdlib ``html.parser`` event
+   stream for everything else.
 2. ``strip_boilerplate`` — scores block-level subtrees by link-text
-   ratio, text density (text chars per tag) and class/id/tag hints;
-   drops nav/footer/sidebar/cookie-banner-like blocks.
+   ratio, text density (text chars per tag) and class/id/tag hints,
+   figures gathered for every block in one pass; drops
+   nav/footer/sidebar/cookie-banner-like blocks.
 3. ``serialize_markdown`` — walks the pruned tree emitting markdown
    following the reference wrapper's conventions (ATX headings, ``-``
    bullets, pipe tables, fenced code — config.py:142-150
@@ -27,6 +29,7 @@ the reference post-processes MarkItDown output.
 from __future__ import annotations
 
 import re
+from html import unescape
 from html.parser import HTMLParser
 
 # --- DOM ---------------------------------------------------------------
@@ -47,6 +50,8 @@ _IMPLIED_CLOSE = {
     "dt": {"dt", "dd"},
     "dd": {"dt", "dd"},
 }
+# Open elements an implied close does not reach past.
+_IMPLIED_STOP = frozenset({"table", "ul", "ol", "div", "section", "body"})
 
 BLOCK_TAGS = frozenset(
     {"div", "section", "article", "main", "aside", "nav", "header",
@@ -57,22 +62,22 @@ BLOCK_TAGS = frozenset(
 SKIP_TAGS = frozenset({"script", "style", "noscript", "template", "svg",
                        "iframe", "object", "head", "title", "meta", "link",
                        "base"})
+# Open elements whose content the DOM drops (``_DomBuilder._raw_stack``).
+_DROP_CONTENT = SKIP_TAGS - {"meta", "link", "base"}
 
 
 class Node:
     """Minimal DOM node. ``tag is None`` marks a text node."""
 
-    __slots__ = ("tag", "attrs", "children", "text", "parent")
+    __slots__ = ("tag", "attrs", "children", "text")
 
     def __init__(self, tag, attrs=None, text=""):
         self.tag = tag
         self.attrs = attrs or {}
         self.children = []
         self.text = text
-        self.parent = None
 
     def append(self, child):
-        child.parent = self
         self.children.append(child)
 
     def iter_text(self):
@@ -108,11 +113,11 @@ class _DomBuilder(HTMLParser):
                 if t in implied:
                     del self.stack[i:]
                     break
-                if t in ("table", "ul", "ol", "div", "section", "body"):
+                if t in _IMPLIED_STOP:
                     break
         node = Node(tag, dict(attrs))
         self._top().append(node)
-        if tag in SKIP_TAGS and tag not in ("meta", "link", "base"):
+        if tag in _DROP_CONTENT:
             self._raw_stack += 1
             self.stack.append(node)
         elif tag not in VOID_ELEMENTS:
@@ -141,27 +146,35 @@ class _DomBuilder(HTMLParser):
         self._top().append(Node(None, text=data))
 
 
-# --- Fast tokenizer (stdlib-parity subset) ------------------------------
+# --- Fast path: tokenizer and builder in one loop -----------------------
 #
 # ``html.parser`` spends most of the extraction budget in ``goahead``'s
-# per-construct regex dance (profiled: ~half of html_to_markdown).  The
-# scanner below tokenizes the *clean-HTML subset* — canonical start/end
-# tags, quoted/unquoted attributes, comments, doctype, PIs, script/style
-# raw text — with one possessive-quantifier regex per construct and
-# feeds the SAME ``_DomBuilder`` callbacks, so the DOM is identical by
-# construction.  Anything outside the subset (tolerant-parser quirks:
+# per-construct regex dance, and a DOM built through its callbacks costs
+# several interpreted calls per node.  ``_fast_parse`` tokenizes the
+# *clean-HTML subset* — canonical start/end tags, quoted/unquoted
+# attributes, comments, doctype, PIs, script/style raw text — with
+# possessive-quantifier regexes (one match per text run and the tag
+# after it) and builds the DOM in the same loop: a local stack of open
+# elements, a direct
+# ``children.append`` and a flag for "the open element drops its
+# content" (``head``, ``script``, … — ``_DomBuilder._raw_stack``, which
+# never exceeds 1).  Each token applies exactly the rule the matching
+# ``_DomBuilder`` callback applies (implied closes, void and skip
+# elements, lenient end tags), so the DOM is the one the stdlib event
+# stream builds.  Anything outside the subset (tolerant-parser quirks:
 # junk in tags, ``<![`` marked sections, unterminated constructs, bogus
 # end tags) raises ``_FallbackToStdlib`` and the document re-parses with
-# the stdlib parser from scratch — byte-for-byte stdlib behavior on the
-# weird tail, ~2-3x less CPU on the common path.  Parity is pinned by
-# the golden fixtures plus a property test that cross-checks both
-# parsers on generated HTML (tests/test_properties.py).
+# the stdlib parser and ``_DomBuilder`` from scratch — byte-for-byte
+# stdlib behavior on the weird tail.  Parity is pinned by the golden
+# fixtures, a property test that cross-checks both parsers on generated
+# HTML (tests/test_properties.py), the kept-oracle differential and a
+# synth-corpus fast-path coverage test (tests/test_kernel_parity.py).
 #
 # Two stdlib behaviors deliberately replicated (html/parser.py,
-# CPython 3.11): text runs between tags are emitted as ONE
-# ``handle_data`` call decoded with ``html.unescape`` (the parser itself
-# calls ``unescape`` in convert_charrefs mode), and a bare ``<`` that
-# opens no construct is emitted as its own ``handle_data("<")`` call.
+# CPython 3.11): text runs between tags are ONE text node decoded with
+# ``html.unescape`` (the parser itself calls ``unescape`` in
+# convert_charrefs mode; a run that decodes to "" adds no node), and a
+# bare ``<`` that opens no construct is a text node of its own.
 
 class _FallbackToStdlib(Exception):
     pass
@@ -175,94 +188,138 @@ _FAST_STARTTAG = re.compile(
     r'((?:\s++[^\s/>=]++(?:\s*+=++\s*+'
     r'(?:"[^"]*+"|\'[^\']*+\'|(?![\'"])[^\s>]++))?+)*+)'
     r'\s*+(/?+)>')
+# Group 2 never matches "": an empty value is a valueless attribute.
 _FAST_ATTR = re.compile(
     r'\s++([^\s/>=]++)(?:\s*+=++\s*+'
     r'("[^"]*+"|\'[^\']*+\'|(?![\'"])[^\s>]++))?+')
 _FAST_ENDTAG = re.compile(r'</\s*+([a-zA-Z][-.a-zA-Z0-9:_]*+)\s*+>')
+# One step of the loop: the text run up to the next ``<``, then a start
+# or end tag (``_FAST_STARTTAG``'s and ``_FAST_ENDTAG``'s groups) if one
+# opens there.  Groups: 1 text, 2 tag, 3 attributes, 4 "/", 5 end tag.
+_FAST_STEP = re.compile(
+    r'([^<]*+)(?:' + _FAST_STARTTAG.pattern
+    + '|' + _FAST_ENDTAG.pattern + ')?+')
 _COMMENT_CLOSE = re.compile(r'--\s*>')
 _RAW_INTEREST = {t: re.compile(r'</\s*%s' % t, re.IGNORECASE)
                  for t in ("script", "style")}
 
 
-def _fast_feed(data: str, builder: "_DomBuilder") -> None:
-    from html import unescape
-
+def _fast_parse(data: str) -> Node:
+    """The DOM ``_DomBuilder`` builds for ``data``, built in the scanning
+    loop; raises ``_FallbackToStdlib`` outside the clean-HTML subset."""
+    root = Node("#document")
+    stack = [root]
+    kids = root.children  # children of the innermost open element
+    raw = False           # the innermost open element drops its content
     n = len(data)
     pos = 0
-    find = data.find
+    step = _FAST_STEP.match
+    find_attrs = _FAST_ATTR.findall
     while pos < n:
-        lt = find("<", pos)
-        if lt < 0:
-            text = data[pos:]
-            builder.handle_data(unescape(text) if "&" in text else text)
-            break
-        if lt > pos:
-            text = data[pos:lt]
-            builder.handle_data(unescape(text) if "&" in text else text)
-        nxt = data[lt + 1:lt + 2]
-        if nxt and (nxt.isalpha() and nxt.isascii()):
-            m = _FAST_STARTTAG.match(data, lt)
-            if not m:
-                raise _FallbackToStdlib  # tolerant-parser territory
-            tag = m.group(1).lower()
-            raw_attrs = m.group(2)
-            attrs = []
-            if raw_attrs:
-                for am in _FAST_ATTR.finditer(raw_attrs):
-                    v = am.group(2)
-                    if v is not None:
-                        if v[0] in "\"'":
-                            v = v[1:-1]
-                        if "&" in v:
-                            v = unescape(v)
-                    attrs.append((am.group(1).lower(), v))
-            pos = m.end()
-            if m.group(3):
-                builder.handle_startendtag(tag, attrs)
+        m = step(data, pos)
+        text, tag, raw_attrs, close, end_tag = m.groups()
+        pos = m.end()
+        if text and not raw:
+            if "&" in text:
+                text = unescape(text)
+            if text:
+                kids.append(Node(None, None, text))
+        if tag is not None:
+            tag = tag.lower()
+            if not raw:
+                attrs = {}
+                if raw_attrs:
+                    for name, v in find_attrs(raw_attrs):
+                        if not v:
+                            v = None
+                        else:
+                            if v[0] in "\"'":
+                                v = v[1:-1]
+                            if "&" in v:
+                                v = unescape(v)
+                        attrs[name.lower()] = v
+                node = Node(tag, attrs)
+                if close:
+                    kids.append(node)
+                    continue
+                implied = _IMPLIED_CLOSE.get(tag)
+                if implied:
+                    for i in range(len(stack) - 1, 0, -1):
+                        t = stack[i].tag
+                        if t in implied:
+                            del stack[i:]
+                            kids = stack[-1].children
+                            break
+                        if t in _IMPLIED_STOP:
+                            break
+                kids.append(node)
+                if tag in _DROP_CONTENT:
+                    raw = True
+                elif tag in VOID_ELEMENTS:
+                    continue
+                stack.append(node)
+                kids = node.children
+            elif close:
                 continue
-            builder.handle_starttag(tag, attrs)
-            if tag in ("script", "style"):
-                pos = _fast_raw(data, pos, tag, builder)
+            if tag == "script" or tag == "style":
+                pos = _raw_text_end(data, pos, tag)
             continue
-        if nxt == "/":
-            m = _FAST_ENDTAG.match(data, lt)
-            if not m:
-                raise _FallbackToStdlib  # </>, bogus or unterminated
-            builder.handle_endtag(m.group(1).lower())
-            pos = m.end()
+        if end_tag is not None:
+            tag = end_tag.lower()
+            if raw:
+                if stack[-1].tag == tag:
+                    stack.pop()
+                    raw = False
+                    kids = stack[-1].children
+                continue
+            for i in range(len(stack) - 1, 0, -1):
+                if stack[i].tag == tag:
+                    del stack[i:]
+                    kids = stack[-1].children
+                    break
+            # Unmatched close tag: ignored (lenient parse).
             continue
+        if pos == n:
+            break
+        # A '<' that opens no well-formed tag.
+        lt = pos
+        nxt = data[lt + 1:lt + 2]
+        if (nxt.isalpha() and nxt.isascii()) or nxt == "/":
+            raise _FallbackToStdlib  # tolerant-parser territory
         if data.startswith("<!--", lt):
             m = _COMMENT_CLOSE.search(data, lt + 4)
             if not m:
                 raise _FallbackToStdlib  # unterminated comment
-            pos = m.end()  # comment content: no builder callback
+            pos = m.end()  # comment content: no node
             continue
         if nxt == "!":
             if data.startswith("<![", lt):
                 raise _FallbackToStdlib  # marked section scanning
-            gt = find(">", lt + 2)
+            gt = data.find(">", lt + 2)
             if gt < 0:
                 raise _FallbackToStdlib
             pos = gt + 1  # doctype / bogus comment: ignored
             continue
         if nxt == "?":
-            gt = find(">", lt + 2)
+            gt = data.find(">", lt + 2)
             if gt < 0:
                 raise _FallbackToStdlib
             pos = gt + 1  # processing instruction: ignored
             continue
         if lt + 1 < n:
-            builder.handle_data("<")  # stdlib: lone '<' is its own data
+            if not raw:
+                kids.append(Node(None, None, "<"))  # stdlib: lone '<' is its own data
             pos = lt + 1
             continue
         raise _FallbackToStdlib  # trailing '<' at EOF
+    return root
 
 
-def _fast_raw(data: str, pos: int, tag: str,
-              builder: "_DomBuilder") -> int:
-    """Scan script/style raw text exactly like stdlib CDATA mode: data
-    (which the builder drops) up to a ``</tag`` that parses as a real
-    end tag; mismatched end tags stay data and the mode continues."""
+def _raw_text_end(data: str, pos: int, tag: str) -> int:
+    """Where script/style raw text from ``pos`` ends, scanned exactly like
+    stdlib CDATA mode: at the first ``</tag`` that parses as a real end
+    tag (its start is returned, so the caller handles that end tag), or
+    at EOF; mismatched end tags stay (dropped) data and the mode holds."""
     interest = _RAW_INTEREST[tag]
     n = len(data)
     while pos < n:
@@ -271,8 +328,7 @@ def _fast_raw(data: str, pos: int, tag: str,
             return n  # unterminated raw element: rest is (dropped) data
         em = _FAST_ENDTAG.match(data, m.start())
         if em and em.group(1).lower() == tag:
-            builder.handle_endtag(tag)
-            return em.end()
+            return m.start()
         gt = data.find(">", m.start() + 1)
         if gt < 0:
             raise _FallbackToStdlib  # unterminated bogus end tag at EOF
@@ -281,16 +337,12 @@ def _fast_raw(data: str, pos: int, tag: str,
 
 
 def parse_dom(html_text: str) -> Node:
-    """Parse HTML text into a lenient DOM tree (fast scanner with
-    stdlib fallback — identical output either way)."""
-    builder = _DomBuilder()
+    """Parse HTML text into a lenient DOM tree (fast path with stdlib
+    fallback — identical output either way)."""
     try:
-        _fast_feed(html_text, builder)
-        return builder.root
-    except _FallbackToStdlib:
-        pass
+        return _fast_parse(html_text)
     except Exception:
-        pass
+        pass  # _FallbackToStdlib, or any fast-path fault: stdlib decides
     builder = _DomBuilder()
     try:
         builder.feed(html_text)
@@ -312,19 +364,11 @@ _BOILERPLATE_HINT = re.compile(
 
 _ALWAYS_DROP_TAGS = frozenset({"nav", "footer", "aside"})
 
-
-def _link_text_len(node: Node) -> int:
-    if node.tag is None:
-        return 0
-    if node.tag == "a":
-        return len(node.text_content())
-    return sum(_link_text_len(c) for c in node.children)
-
-
-def _tag_count(node: Node) -> int:
-    if node.tag is None:
-        return 0
-    return 1 + sum(_tag_count(c) for c in node.children)
+# Container blocks ``strip_boilerplate`` scores.  Headings and
+# paragraphs are never candidates.
+_CANDIDATES = frozenset({"div", "section", "aside", "nav", "header",
+                         "footer", "ul", "ol", "form", "table", "figure",
+                         "fieldset"})
 
 
 def _hint_match(node: Node) -> bool:
@@ -334,16 +378,54 @@ def _hint_match(node: Node) -> bool:
     return bool(blob and _BOILERPLATE_HINT.search(blob))
 
 
-def block_score(node: Node) -> float:
+def _block_stats(root: Node) -> dict:
+    """``id(node)`` → ``(text_len, link_len, tags)`` for every candidate
+    block, in one bottom-up pass.
+
+    ``text_len`` is ``len(node.text_content().strip())``; ``link_len``
+    sums ``len(a.text_content())`` over the outermost ``<a>``s below the
+    node; ``tags`` counts the elements of its subtree, itself included.
+    ``pieces`` collects the text nodes in document order, so a subtree's
+    text is what it appended there.  SKIP_TAGS elements, whose text
+    ``text_content`` leaves out, are leaves in ``parse_dom``'s trees:
+    both builders drop their content.
+    """
+    pieces: list[str] = []
+    append = pieces.append
+    stats = {}
+
+    def walk(node: Node):
+        """(link_len, tags) of ``node``."""
+        start = len(pieces)
+        link = 0
+        tags = 1
+        for child in node.children:
+            if child.tag is None:
+                append(child.text)
+            else:
+                child_link, child_tags = walk(child)
+                link += child_link
+                tags += child_tags
+        if node.tag == "a":
+            link = sum(map(len, pieces[start:]))
+        elif node.tag in _CANDIDATES:
+            text_len = len("".join(pieces[start:]).strip())
+            stats[id(node)] = (text_len, link, tags)
+        return link, tags
+
+    walk(root)
+    return stats
+
+
+def block_score(node: Node, text_len: int, link_len: int,
+                tags: int) -> float:
     """Boilerplate score for a block subtree. > 0.5 → drop.
 
-    Combines (north_star heuristics):
+    Combines (north_star heuristics), over ``_block_stats``' figures:
     - link-text ratio: chars inside <a> / total chars
     - tag density: tags per text char (markup-heavy, text-light blocks)
     - class/id/role hints and structural tags (nav/footer/aside)
     """
-    text = node.text_content().strip()
-    text_len = len(text)
     if node.tag in _ALWAYS_DROP_TAGS:
         return 1.0
 
@@ -355,13 +437,12 @@ def block_score(node: Node) -> float:
         # No text at all: markup-only block (spacer/button bar).
         return score + 0.3
 
-    link_ratio = _link_text_len(node) / text_len
+    link_ratio = link_len / text_len
     if link_ratio > 0.65:
         score += 0.5
     elif link_ratio > 0.4:
         score += 0.25
 
-    tags = _tag_count(node)
     density = text_len / max(tags, 1)  # text chars per tag
     if density < 10 and text_len < 200:
         score += 0.25
@@ -373,18 +454,21 @@ def strip_boilerplate(root: Node) -> Node:
 
     Headings and paragraphs are never dropped on density alone — only
     container blocks are candidates; an <h1> inside a nav still dies with
-    the nav (subtree pruning).
+    the nav (subtree pruning).  A block is scored before anything below
+    it is pruned, so its figures come from the unpruned tree, computed
+    for every candidate in one pass up front.
     """
-    candidates = {"div", "section", "aside", "nav", "header", "footer",
-                  "ul", "ol", "form", "table", "figure", "fieldset"}
+    stats = _block_stats(root)
 
     def prune(node: Node) -> bool:
         """Return True if node should be removed."""
-        if node.tag in SKIP_TAGS and node.tag is not None:
+        tag = node.tag
+        if tag in SKIP_TAGS:
             return True
-        if node.tag in candidates and block_score(node) > 0.5:
+        if tag in _CANDIDATES and block_score(node, *stats[id(node)]) > 0.5:
             return True
-        node.children = [c for c in node.children if not prune(c)]
+        node.children = [c for c in node.children
+                         if c.tag is None or not prune(c)]
         return False
 
     prune(root)
@@ -397,7 +481,11 @@ _WS_RUNS = re.compile(r"[ \t\r\n\f]+")
 
 
 def _collapse_ws(text: str) -> str:
-    return _WS_RUNS.sub(" ", text)
+    # Single spaces only: the substitution would return ``text`` as is.
+    if ("  " in text or "\n" in text or "\t" in text or "\r" in text
+            or "\f" in text):
+        return _WS_RUNS.sub(" ", text)
+    return text
 
 
 class _MarkdownWriter:
@@ -420,7 +508,7 @@ class _MarkdownWriter:
         tag = node.tag
         if tag in SKIP_TAGS:
             return ""
-        inner = "".join(self.inline(c) for c in node.children)
+        inner = "".join([self.inline(c) for c in node.children])
         if tag in ("strong", "b"):
             body = inner.strip()
             return f"**{body}**" if body else ""
@@ -445,7 +533,7 @@ class _MarkdownWriter:
         return inner
 
     def inline_children(self, node: Node) -> str:
-        return "".join(self.inline(c) for c in node.children)
+        return "".join([self.inline(c) for c in node.children])
 
     # -- blocks -----------------------------------------------------------
 

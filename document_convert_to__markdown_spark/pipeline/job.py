@@ -44,6 +44,7 @@ from __future__ import annotations
 import hashlib
 import time
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -167,20 +168,48 @@ def _gated(pages: DataFrame, max_bytes: int) -> DataFrame:
     Python, but the row is NOT dropped (A3: no silent drops) — ``_len``
     keeps its size for the ``skipped_too_large`` row.
     """
-    sized = pages.select("url", "html").withColumn(
-        "_len", F.coalesce(F.length("html"), F.lit(0))
+    length = F.coalesce(F.length("html"), F.lit(0))
+    return pages.select(
+        "url",
+        F.when(length <= F.lit(max_bytes), F.col("html")).alias("html"),
+        length.alias("_len"),
     )
-    return sized.withColumn(
-        "html", F.when(F.col("_len") <= F.lit(max_bytes), F.col("html")))
 
 
 @dataclass
 class ExtractResult:
-    """The three output tables (SURVEY §2 Part B "Sinks")."""
-    results: DataFrame  # one row per url
-    assets: DataFrame   # exploded (url, asset_name, page, data)
-    ledger: DataFrame   # one row per partition (lineage/metrics)
-    raw: DataFrame      # combined, for single-pass persistence
+    """The three output tables (SURVEY §2 Part B "Sinks") over ``raw``.
+
+    Each table's plan is built on first use: a caller that reads one
+    table pays the driver's plan-building round trips for that one.
+    """
+    raw: DataFrame  # combined, for single-pass persistence
+
+    @cached_property
+    def results(self) -> DataFrame:
+        """One row per url."""
+        return (self.raw.filter(F.col("kind") == "doc")
+                .select(*RESULT_COLUMNS))
+
+    @cached_property
+    def assets(self) -> DataFrame:
+        """Exploded (url, asset_name, page, data)."""
+        return (
+            self.raw.filter((F.col("kind") == "doc") & (F.col("n_images") > 0))
+            .select("url", F.explode("assets").alias("asset"))
+            .select(
+                "url",
+                F.col("asset.name").alias("asset_name"),
+                F.col("asset.page").alias("page"),
+                F.col("asset.data").alias("data"),
+            )
+        )
+
+    @cached_property
+    def ledger(self) -> DataFrame:
+        """One row per partition (lineage/metrics)."""
+        return (self.raw.filter(F.col("kind") == "metrics")
+                .select(*LEDGER_COLUMNS))
 
 
 def run_extraction(
@@ -211,28 +240,7 @@ def run_extraction(
         sized.repartitionById(partitions + giant_partitions, pid)
         .mapInPandas(_extract_partition, schema=EXTRACT_SCHEMA)
     )
-    return _split(raw)
-
-
-def _split(raw: DataFrame) -> ExtractResult:
-    """results / assets / ledger over the combined extraction output."""
-    docs = raw.filter(F.col("kind") == "doc")
-    assets = (
-        docs.filter(F.col("n_images") > 0)
-        .select("url", F.explode("assets").alias("asset"))
-        .select(
-            "url",
-            F.col("asset.name").alias("asset_name"),
-            F.col("asset.page").alias("page"),
-            F.col("asset.data").alias("data"),
-        )
-    )
-    return ExtractResult(
-        results=docs.select(*RESULT_COLUMNS),
-        assets=assets,
-        ledger=raw.filter(F.col("kind") == "metrics").select(*LEDGER_COLUMNS),
-        raw=raw,
-    )
+    return ExtractResult(raw)
 
 
 def run_extraction_resumable(
@@ -349,7 +357,7 @@ def run_extraction_resumable(
         for s in STATUSES
     ]).persist(StorageLevel.DISK_ONLY)
     try:
-        out = _split(raw)
+        out = ExtractResult(raw)
         new_assets = out.assets
         if resume and table_exists(f"{out_dir}/assets"):
             # A crash between the assets commit and the results commit
