@@ -7,7 +7,7 @@ per-query wall times for the SQL-expressible operator suite at
 
 Env:
   SPARK_GRAFT_SF_DIR   sf directory (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] cores (default 32)
+  SPARK_GRAFT_CPUS     local[N] cores (default: this host's CPU count)
   BENCH_N_DOCS         synthetic corpus size (default 8000)
 
 Scaling evidence (north rule, N vs 4N): scripts/bench_scaling.py runs
@@ -184,7 +184,11 @@ BENCH_QUERIES = [
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from document_convert_to__markdown_spark.pipeline.session import (
+        default_cores,
+    )
+
+    cpus = int(default_cores())
     n_docs = int(os.environ.get("BENCH_N_DOCS", "8000"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 

@@ -27,7 +27,9 @@ Scale design (SURVEY §4.2, north rule):
   every input row, oversize rows included.
 - **resume**: pages LEFT ANTI JOIN completed urls from a previous run's
   results (idempotent url-keyed overwrite — reference analog: the
-  delete-then-rewrite at image_processor.py:100-110).
+  delete-then-rewrite at image_processor.py:100-110).  A resume pays
+  only for work that is left: a finished job re-run is one status-count
+  query plus one url-only probe, and commits nothing.
 - **no per-row Python UDFs** (input_hint mandate): the only Python
   boundary is Arrow-batched ``mapInPandas``.
 - **persisted writes at the cores' width**: ``run_extraction_resumable``
@@ -43,6 +45,7 @@ from __future__ import annotations
 
 import hashlib
 import time
+from collections import Counter
 from dataclasses import dataclass
 from functools import cached_property
 from typing import Iterator, Optional
@@ -272,12 +275,23 @@ def run_extraction_resumable(
 
     Resume anti-joins pages against urls already committed to
     ``results`` — only unfinished work reruns; a finished job re-run is
-    a no-op (idempotent by url key, SURVEY A20).  Commit order is
-    assets → ledger → results: results is the done-marker, so a crash
-    before its commit re-extracts those urls; their re-extracted asset
-    rows are anti-joined against the committed (url, asset_name) keys
-    before the append, keeping the assets table key-unique — the
-    reference's delete-then-rewrite key semantics
+    a no-op (idempotent by url key, SURVEY A20).  It first reads the
+    committed status counts (the status column only), then probes
+    ``pages.select("url")`` anti-joined with the done urls for one row,
+    reading no blob.  With nothing left it returns the committed counts:
+    no extraction plan, no cache, no Python task, and no commit to any
+    table — so the ledger has no rows for such a run, and a stale
+    ``_temporary`` under a parquet table waits for the next append,
+    which still sweeps it.  With work left, the summary is the committed
+    counts plus this run's ``observe`` counts: ``results`` is
+    append-only under the run_id contract (no concurrent writer) and
+    ``observe`` counts exactly the doc rows its commit writes.
+
+    Commit order is assets → ledger → results: results is the
+    done-marker, so a crash before its commit re-extracts those urls;
+    their re-extracted asset rows are anti-joined against the committed
+    (url, asset_name) keys before the append, keeping the assets table
+    key-unique — the reference's delete-then-rewrite key semantics
     (image_processor.py:100-110) at table scope; with
     ``table_format="snapshot"`` each append is atomic.
     """
@@ -327,9 +341,17 @@ def run_extraction_resumable(
         fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
         return fs.exists(hpath)
 
-    todo = pages
+    todo, done_counts = pages, Counter()
     if resume and table_exists(results_path):
-        done = read_table(results_path).select("url")
+        done_table = read_table(results_path)
+        # Totals cover prior runs: column pruning reads only ``status``.
+        done_counts = Counter({
+            r["status"]: r["count"]
+            for r in done_table.groupBy("status").count().collect()})
+        done = done_table.select("url")
+        # The url-only probe reads no blob; nothing left, nothing runs.
+        if pages.select("url").join(done, "url", "left_anti").isEmpty():
+            return dict(done_counts)
         # While the done set fits the broadcast threshold this is a
         # broadcast hash join: no exchange beyond the extract one.  Past
         # it, the sort-merge anti join hash-shuffles the pages, blobs
@@ -374,19 +396,16 @@ def run_extraction_resumable(
         # Written at the cores' width, not P + G (docstring).
         cores = spark.sparkContext.defaultParallelism
         write_table(new_assets.coalesce(cores), "assets")
-        run_counts = {k: v for k, v in obs.get.items() if v}
+        # A status no row had sums to null: keep only the counts.
+        run_counts = Counter({k: v for k, v in obs.get.items() if v})
         write_table(out.ledger.withColumn("run_id", F.lit(run_id))
                     .coalesce(1), "ledger")
         write_table(out.results.coalesce(cores), "results")
     finally:
         raw.unpersist()
 
-    if resume:
-        # Totals must cover prior runs too — aggregate the persisted
-        # status column (column pruning reads only that column).
-        summary_rows = (
-            read_table(results_path)
-            .groupBy("status").count().orderBy("status").collect()
-        )
-        return {r["status"]: r["count"] for r in summary_rows}
-    return run_counts
+    # ``results`` is append-only under the run_id contract (no concurrent
+    # writer) and ``observe`` counted exactly the doc rows its commit
+    # wrote, so the totals need no re-read.  Counter addition drops the
+    # zero counts.
+    return dict(done_counts + run_counts)

@@ -22,7 +22,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from document_convert_to__markdown_spark.pipeline.session import (
+        default_cores,
+    )
+
+    cores = int(default_cores())
 
     from pyspark.sql import functions as F
 

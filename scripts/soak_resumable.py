@@ -14,6 +14,12 @@ design was that ratio plus a full extra copy of every blob).  ``files``
 counts each table's part-files: one commit each, written one task per
 core for results and assets and one task for the ledger.
 
+A second, ``resume=True`` call over the same pages then times the
+no-op resume (``noop_resume_sec``) and reports the bytes and part-files
+it added to the output (``noop_resume_bytes_added`` /
+``noop_resume_files_added``, both 0: a finished job re-run reads the
+status and url columns only and commits nothing).
+
 Usage: python scripts/soak_resumable.py [n_docs] [size_scale]
 Prints one JSON line; safe to rerun (fresh tmp output per run).
 """
@@ -46,9 +52,13 @@ def part_files(path: str) -> int:
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 50_000
     size_scale = float(sys.argv[2]) if len(sys.argv) > 2 else 8.0
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from document_convert_to__markdown_spark.pipeline.session import (
+        default_cores,
+    )
+
+    cores = int(default_cores())
     # Size the heap like a real executor: ~1 GB/core (the default 8g is
-    # a test-suite setting; 32 concurrent extract tasks over ~25KB-median
+    # a test-suite setting; one extract task per core over ~25KB-median
     # rows with multi-MB giants need headroom for Arrow + shuffle).
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(cores, 8)}g")
 
@@ -88,6 +98,13 @@ def main() -> None:
         bytes_out = sum(tables.values())
         stray = du(out) - bytes_out  # anything else (e.g. a raw table)
 
+        # A resume over the same pages finds every url done.
+        bytes_before, files_before = du(out), part_files(out)
+        t0 = time.time()
+        noop_summary = run_extraction_resumable(spark, pages, out,
+                                                run_id="noop", resume=True)
+        noop_wall = time.time() - t0
+
         print(json.dumps({
             "metric": "resumable_write_amplification",
             "n_docs": n_docs,
@@ -102,6 +119,10 @@ def main() -> None:
             "stray_bytes": stray,
             "amplification_vs_input": round(bytes_out / bytes_in, 3),
             "summary": summary,
+            "noop_resume_sec": round(noop_wall, 2),
+            "noop_resume_bytes_added": du(out) - bytes_before,
+            "noop_resume_files_added": part_files(out) - files_before,
+            "noop_resume_summary_matches": noop_summary == summary,
         }))
     finally:
         shutil.rmtree(work, ignore_errors=True)

@@ -27,7 +27,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_vecs = int(sys.argv[2]) if len(sys.argv) > 2 else 1_000_000
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from document_convert_to__markdown_spark.pipeline.session import (
+        default_cores,
+    )
+
+    cores = int(default_cores())
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{max(cores, 8)}g")
 
     from pyspark.sql import functions as F

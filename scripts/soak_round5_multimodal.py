@@ -65,13 +65,18 @@ def main() -> None:
         audio_spectral_hash, image_dhash, image_neardup_pairs,
     )
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "64")
-             .config("spark.driver.memory", "48g")
+    from document_convert_to__markdown_spark.pipeline.session import (
+        default_cores,
+    )
+
+    cores = int(default_cores())
+    spark = (SparkSession.builder.master(f"local[{cores}]")
+             .config("spark.sql.shuffle.partitions", str(2 * cores))
+             .config("spark.driver.memory", f"{max(3 * cores // 2, 8)}g")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
     results: dict = {"metric": "multimodal_neardup_soak",
-                     "n_scenes": n_scenes, "cores": 32}
+                     "n_scenes": n_scenes, "cores": cores}
 
     # --- images: 2 PNG renditions per scene, executor-side synth ----
     from pyspark.sql.types import (BinaryType, StringType, StructField,

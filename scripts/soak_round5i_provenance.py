@@ -53,9 +53,10 @@ def main() -> int:
     )
     from document_convert_to__markdown_spark.pipeline.session import (
         build_session,
+        default_cores,
     )
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(default_cores())
     spark = build_session("soak-r5i-provenance",
                           master=f"local[{cores}]",
                           shuffle_partitions=2 * cores)

@@ -35,7 +35,11 @@ def _page_text(i: int) -> str:
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from document_convert_to__markdown_spark.pipeline.session import (
+        default_cores,
+    )
+
+    cores = int(default_cores())
     n_parts = 8
 
     from pyspark.sql import functions as F

@@ -67,6 +67,8 @@ def test_sigkill_then_resume_completes(spark, tmp_path):
     results = spark.read.parquet(f"{out}/results")
     assert results.count() == N_DOCS
     assert results.select("url").distinct().count() == N_DOCS
+    assert summary == {r["status"]: r["count"] for r in
+                       results.groupBy("status").count().collect()}
 
     # Assets must be key-unique too: the killed run may have committed
     # asset rows for urls whose results commit never happened; the

@@ -82,6 +82,9 @@ def test_resume_completes_partial_run(spark, pages, tmp_path):
     assert sum(summary.values()) == 300
     full = spark.read.parquet(f"{out}/results")
     assert full.count() == 300
+    # Committed counts plus this run's observed counts = the table's.
+    assert summary == {r["status"]: r["count"] for r in
+                       full.groupBy("status").count().collect()}
     assert full.select("url").distinct().count() == 300
 
 

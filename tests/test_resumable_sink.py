@@ -2,7 +2,8 @@
 P + G width into the cache, and the three table commits are written at
 the cores' width — at most ``defaultParallelism`` part-files for
 ``results`` and ``assets``, exactly one for the ledger — with the same
-rows as the plain ``run_extraction`` plan."""
+rows as the plain ``run_extraction`` plan.  A resume with nothing left
+runs no extraction and commits nothing."""
 
 import glob
 import uuid
@@ -80,6 +81,10 @@ def _read(spark, out, table, table_format):
 @pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
 def test_sink_width_extraction_width_and_parity(spark, pages, expected,
                                                 tmp_path, table_format):
+    """A fresh call over three quarters of the pages, a resume over all
+    of them (a real tail), then a resume that finds every url done."""
+    from pyspark.sql import functions as F
+
     from document_convert_to__markdown_spark.pipeline.job import (
         run_extraction_resumable,
     )
@@ -88,35 +93,65 @@ def test_sink_width_extraction_width_and_parity(spark, pages, expected,
     width = expected["width"]
     assert width > cores
     out = str(tmp_path / table_format)
+    head = pages.filter(F.crc32("url") % 4 != 0)
+    head_urls = {r["url"] for r in head.select("url").collect()}
+    assert 0 < len(head_urls) < len(expected["results"])
     files = dict.fromkeys(TABLES, 0)
-    counts = {}
-    for resume in (False, True):
+    for run, (src, resume) in enumerate(
+            ((head, False), (pages, True), (pages, True))):
         with _job_group(spark) as stage_widths:
             run_extraction_resumable(
-                spark, pages, out, run_id=f"r{int(resume)}", resume=resume,
+                spark, src, out, run_id=f"r{run}", resume=resume,
                 partitions=P, table_format=table_format)
             widths = stage_widths()
         now = _part_files(out)
         new = {t: now[t] - files[t] for t in TABLES}
         files = now
-        assert 1 <= new["results"] <= cores, new
-        assert new["assets"] <= cores, new
-        assert new["ledger"] == 1, new
-        # The extraction ran exactly once, at its full width.
-        assert widths.count(width) == 1, widths
 
         tables = {t: _read(spark, out, t, table_format) for t in TABLES}
-        ledger_rows = tables["ledger"].filter(
-            f"run_id = 'r{int(resume)}'").count()
-        assert ledger_rows == width
-        if not resume:
+        ledger_rows = tables["ledger"].filter(f"run_id = 'r{run}'").count()
+        if run == 2:
+            # The no-op resume ran no extraction and committed nothing.
+            assert new == dict.fromkeys(TABLES, 0), new
+            assert width not in widths, widths
+            assert ledger_rows == 0
+        else:
+            assert 1 <= new["results"] <= cores, new
+            assert new["assets"] <= cores, new
+            assert new["ledger"] == 1, new
+            # The extraction ran exactly once, at its full width.
+            assert widths.count(width) == 1, widths
+            assert ledger_rows == width
+
+        if run == 0:
+            assert _result_keys(tables["results"]) == [
+                k for k in expected["results"] if k[0] in head_urls]
+        else:
             assert _result_keys(tables["results"]) == expected["results"]
             assert _asset_keys(tables["assets"]) == expected["assets"]
-            counts = {t: tables[t].count() for t in ("results", "assets")}
-        else:
-            # The resume found every url done and appended no rows.
-            assert {t: tables[t].count()
-                    for t in ("results", "assets")} == counts
+
+
+@pytest.mark.spark
+def test_noop_resume_commits_no_snapshot_version(spark, pages, tmp_path):
+    """A resume that finds every url done adds no snapshot version to any
+    table and returns the same totals as the call that did the work."""
+    from document_convert_to__markdown_spark.pipeline.job import (
+        run_extraction_resumable,
+    )
+    from document_convert_to__markdown_spark.sources import snapshot
+
+    out = str(tmp_path / "snap")
+    first = run_extraction_resumable(spark, pages, out, run_id="full",
+                                     partitions=P, table_format="snapshot")
+    versions = {t: snapshot.current_version(f"{out}/{t}") for t in TABLES}
+    assert all(versions.values()), versions
+
+    again = run_extraction_resumable(spark, pages, out, run_id="noop",
+                                     resume=True, partitions=P,
+                                     table_format="snapshot")
+    assert again == first
+    assert {t: snapshot.current_version(f"{out}/{t}")
+            for t in TABLES} == versions
 
 
 @pytest.mark.spark
