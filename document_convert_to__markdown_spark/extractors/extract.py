@@ -218,13 +218,14 @@ def extract_document(url: str, payload: Optional[bytes]) -> ExtractedDocument:
     if len(payload) > MAX_DOCUMENT_BYTES:
         return too_large_document(url)
 
-    fmt = sniff_format(payload)
-    convert = CONVERTERS.get(fmt)
-    if convert is None:
-        return _status_row(url, doc_name, fmt,
-                           STATUS_EMPTY if fmt == sniffer.FMT_EMPTY
-                           else STATUS_UNSUPPORTED)
+    fmt = sniffer.FMT_UNKNOWN  # the format of a row whose sniff raised
     try:
+        fmt = sniff_format(payload)
+        convert = CONVERTERS.get(fmt)
+        if convert is None:
+            return _status_row(url, doc_name, fmt,
+                               STATUS_EMPTY if fmt == sniffer.FMT_EMPTY
+                               else STATUS_UNSUPPORTED)
         converted = convert(payload, doc_name)
         if converted is None:
             return _status_row(url, doc_name, fmt, STATUS_UNSUPPORTED)

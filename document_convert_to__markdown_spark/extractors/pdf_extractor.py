@@ -209,21 +209,6 @@ class _PdfObjects:
                 stream = raw
             self.objects[num] = (obj_dict, stream)
 
-    def resolve(self, value: Any) -> Any:
-        seen = 0
-        while isinstance(value, Ref) and seen < 32:
-            obj = self.objects.get(value.num)
-            if obj is None:
-                return None
-            value = obj[0] if obj[1] is None else value
-            if isinstance(value, Ref) and obj[1] is None:
-                seen += 1
-                continue
-            if obj[1] is not None:
-                return value  # stream object: keep the Ref for stream access
-            break
-        return value
-
     def dict_of(self, value: Any) -> dict:
         if isinstance(value, Ref):
             obj = self.objects.get(value.num)
@@ -419,14 +404,21 @@ def _spans_to_text(spans: list[_Span]) -> str:
 # --- page tree + top level -------------------------------------------------
 
 def _collect_pages(objects: _PdfObjects) -> list[int]:
-    """Page object numbers in tree order; fallback: object-number order."""
+    """Page object numbers in tree order; fallback: object-number order.
+
+    Each node is walked once: a ``/Kids`` entry that repeats a node or
+    points back up the tree (a DAG or a cycle) is skipped, so pages come
+    out in first-visit order and a hostile tree costs one visit a node.
+    """
     roots = [num for num, (d, _s) in objects.objects.items()
              if d.get("Type") == "/Catalog"]
     pages: list[int] = []
+    visited: set[int] = set()
 
     def walk(node_num: int, depth: int = 0):
-        if depth > 64:
+        if depth > 64 or node_num in visited:
             return
+        visited.add(node_num)
         obj = objects.objects.get(node_num)
         if obj is None:
             return

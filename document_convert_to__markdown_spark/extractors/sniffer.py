@@ -60,7 +60,6 @@ _HTML_MARKERS = (
     b"<html",
     b"<head",
     b"<body",
-    b"<!DOCTYPE html",
 )
 
 
@@ -90,14 +89,12 @@ def _sniff_zip(payload: bytes) -> str:
                         return FMT_EPUB
                 except Exception:  # noqa: BLE001 — sniffing never raises
                     pass
-    except (zipfile.BadZipFile, OSError, ValueError):
+    except (zipfile.BadZipFile, OSError, ValueError, NotImplementedError):
+        # NotImplementedError: a zip version (or method) ``zipfile``
+        # refuses to read is a container we cannot open.
         return FMT_UNKNOWN
     if "META-INF/container.xml" in names:
         return FMT_EPUB
-    if "[Content_Types].xml" in names:
-        # OOXML container we don't handle — treat as unknown so it
-        # surfaces as a status row, never a silent drop (SURVEY A3).
-        return FMT_UNKNOWN
     return FMT_UNKNOWN
 
 
@@ -210,7 +207,8 @@ def sniff_format(payload: bytes) -> str:
         try:
             json.loads(payload.decode("utf-8"))
             return FMT_JSON
-        except (ValueError, UnicodeDecodeError):
+        except (ValueError, RecursionError):
+            # Too deep to parse is not JSON either.
             pass
 
     # CSV/TSV: >=3 parsed records sharing an identical field count >= 2

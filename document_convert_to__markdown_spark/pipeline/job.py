@@ -72,28 +72,6 @@ DEFAULT_GIANT_THRESHOLD = 4 * 1024 * 1024  # 4 MB
 _NULL_ROW = dict.fromkeys(EXTRACT_SCHEMA.names)
 
 
-def _drop_stale_temporary(spark: SparkSession, target: str) -> None:
-    """Delete leftover FileOutputCommitter scratch under ``target``.
-
-    A SIGKILL that lands during a previous run's *job commit* (the v1
-    committer promotes task files one rename at a time) leaves
-    committed-but-not-promoted task outputs under
-    ``target/_temporary/<jobAttempt>/task_*``.  A later append to the
-    same directory runs its own job commit, which sweeps every task
-    directory it finds there — including the stale ones — into the
-    destination, silently duplicating every url the killed run had
-    finished but not promoted (round-4 verdict, What's wrong #1).
-    The resume owns the directory (the run_id contract excludes a live
-    concurrent writer), so any scratch found here is garbage: drop it
-    before appending.
-    """
-    jvm = spark._jvm
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{target}/_temporary")
-    fs = tmp.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(tmp):
-        fs.delete(tmp, True)
-
-
 def _extract_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas body: doc rows per batch + one metrics trailer row.
 
@@ -254,9 +232,15 @@ def run_extraction_resumable(
     resume: bool = False,
     partitions: Optional[int] = None,
     giant_threshold: int = DEFAULT_GIANT_THRESHOLD,
-    table_format: str = "parquet",
 ) -> dict:
     """Execute with persistence + resume; returns summary counters.
+
+    ``out_dir`` is a ``sources.tables`` target: the three tables are
+    ``{out_dir}/results``, ``/assets`` and ``/ledger``, so a bare path
+    writes parquet directories and ``snapshot:<root>`` atomic
+    snapshot-manifest commits.  A fresh call overwrites them, a resume
+    appends.  A catalog target is refused with ``ValueError``: a
+    catalog append and resume cannot be exercised without catalog jars.
 
     **Single write amplification, at the cores' width**: the extraction
     runs once, at its P + G tasks, into a DISK_ONLY cache, and each
@@ -292,58 +276,28 @@ def run_extraction_resumable(
     their re-extracted asset rows are anti-joined against the committed
     (url, asset_name) keys before the append, keeping the assets table
     key-unique — the reference's delete-then-rewrite key semantics
-    (image_processor.py:100-110) at table scope; with
-    ``table_format="snapshot"`` each append is atomic.
+    (image_processor.py:100-110) at table scope; under ``snapshot:``
+    each append is atomic.
     """
     from pyspark import StorageLevel
 
+    from ..sources.tables import (
+        is_catalog,
+        read_pages,
+        table_exists,
+        write_table,
+    )
+
+    if is_catalog(out_dir):
+        raise ValueError(f"{out_dir!r}: the resumable sink writes parquet "
+                         "or snapshot: tables, not catalog tables")
+
     results_path = f"{out_dir}/results"
-
-    def read_table(path: str) -> DataFrame:
-        if table_format == "snapshot":
-            from ..sources import snapshot as snap
-
-            return snap.read(spark, path)
-        return spark.read.parquet(path)
-
-    def write_table(df: DataFrame, name: str) -> None:
-        target = f"{out_dir}/{name}"
-        if table_format == "snapshot":
-            from ..sources import snapshot as snap
-
-            if resume:
-                snap.commit_append(df, target)
-            else:
-                snap.commit_overwrite(df, target)
-        else:
-            if resume:
-                # Crash-window hygiene: a stale _temporary left by a
-                # killed run's interrupted job commit would be promoted
-                # by this append's own commit (round-4 verdict #1).
-                _drop_stale_temporary(spark, target)
-            df.write.mode("append" if resume else "overwrite").parquet(target)
-
-    def table_exists(path: str) -> bool:
-        """Positive missing-table probe: existence is checked directly
-        instead of catching read exceptions — a caught AnalysisException
-        / FileNotFoundError can also mean a *corrupt* table (renamed
-        column, missing snapshot json), and treating that as 'nothing
-        to resume' silently redoes finished work and appends duplicate
-        rows (review r3).  With the probe, any read error on an
-        existing table propagates."""
-        if table_format == "snapshot":
-            from ..sources import snapshot as snap
-
-            return snap.current_version(path) > 0
-        # Hadoop FS probe: works for any scheme the session can read.
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return fs.exists(hpath)
+    mode = "append" if resume else "overwrite"
 
     todo, done_counts = pages, Counter()
-    if resume and table_exists(results_path):
-        done_table = read_table(results_path)
+    if resume and table_exists(spark, results_path):
+        done_table = read_pages(spark, results_path)
         # Totals cover prior runs: column pruning reads only ``status``.
         done_counts = Counter({
             r["status"]: r["count"]
@@ -381,7 +335,7 @@ def run_extraction_resumable(
     try:
         out = ExtractResult(raw)
         new_assets = out.assets
-        if resume and table_exists(f"{out_dir}/assets"):
+        if resume and table_exists(spark, f"{out_dir}/assets"):
             # A crash between the assets commit and the results commit
             # leaves those urls' asset rows committed but the url marked
             # unfinished; the rerun re-extracts them, so anti-join the
@@ -389,18 +343,18 @@ def run_extraction_resumable(
             # the table key-unique (ADVICE r2: the promised read-side
             # dedup never existed — dedup on write instead).  Column
             # pruning reads only the two key columns, never the blobs.
-            committed = (read_table(f"{out_dir}/assets")
+            committed = (read_pages(spark, f"{out_dir}/assets")
                          .select("url", "asset_name"))
             new_assets = new_assets.join(
                 committed, ["url", "asset_name"], "left_anti")
         # Written at the cores' width, not P + G (docstring).
         cores = spark.sparkContext.defaultParallelism
-        write_table(new_assets.coalesce(cores), "assets")
+        write_table(new_assets.coalesce(cores), f"{out_dir}/assets", mode)
         # A status no row had sums to null: keep only the counts.
         run_counts = Counter({k: v for k, v in obs.get.items() if v})
         write_table(out.ledger.withColumn("run_id", F.lit(run_id))
-                    .coalesce(1), "ledger")
-        write_table(out.results.coalesce(cores), "results")
+                    .coalesce(1), f"{out_dir}/ledger", mode)
+        write_table(out.results.coalesce(cores), results_path, mode)
     finally:
         raw.unpersist()
 

@@ -263,17 +263,20 @@ def _boom(*_args, **_kwargs):
     raise ValueError("boom: bad bytes")
 
 
-@pytest.mark.parametrize("where", ["converter", "cleanup"])
+@pytest.mark.parametrize("where", ["converter", "cleanup", "sniff"])
 def test_raise_in_converter_or_cleanup_is_a_failed_row(monkeypatch, where):
     # a PNG: its converter returns one asset, which a failed row drops
     url, payload = "https://a.example/img/pic.png", synth.make_png(4, 3, 90)
     assert extract_document(url, payload).n_images == 1
     if where == "converter":
         monkeypatch.setitem(extract.CONVERTERS, sniffer.FMT_PNG, _boom)
-    else:
+    elif where == "cleanup":
         monkeypatch.setattr(extract, "clean_markdown_content", _boom)
+    else:
+        monkeypatch.setattr(extract, "sniff_format", _boom)
     doc = extract_document(url, payload)
-    assert doc == (url, doc_name_from_url(url), "png", "failed",
+    fmt = "unknown" if where == "sniff" else "png"
+    assert doc == (url, doc_name_from_url(url), fmt, "failed",
                    "ValueError: boom: bad bytes", None, 0, "none", [])
 
 

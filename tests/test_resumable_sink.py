@@ -70,17 +70,11 @@ def _job_group(spark):
         sc.setLocalProperty("spark.job.description", None)
 
 
-def _read(spark, out, table, table_format):
-    if table_format == "snapshot":
-        from document_convert_to__markdown_spark.sources import snapshot
-        return snapshot.read(spark, f"{out}/{table}")
-    return spark.read.parquet(f"{out}/{table}")
-
-
 @pytest.mark.spark
-@pytest.mark.parametrize("table_format", ["parquet", "snapshot"])
+@pytest.mark.parametrize("prefix", ["", "snapshot:"],
+                         ids=["parquet", "snapshot"])
 def test_sink_width_extraction_width_and_parity(spark, pages, expected,
-                                                tmp_path, table_format):
+                                                tmp_path, prefix):
     """A fresh call over three quarters of the pages, a resume over all
     of them (a real tail), then a resume that finds every url done."""
     from pyspark.sql import functions as F
@@ -88,11 +82,13 @@ def test_sink_width_extraction_width_and_parity(spark, pages, expected,
     from document_convert_to__markdown_spark.pipeline.job import (
         run_extraction_resumable,
     )
+    from document_convert_to__markdown_spark.sources import read_pages
 
     cores = spark.sparkContext.defaultParallelism
     width = expected["width"]
     assert width > cores
-    out = str(tmp_path / table_format)
+    root = str(tmp_path / "out")
+    out = prefix + root
     head = pages.filter(F.crc32("url") % 4 != 0)
     head_urls = {r["url"] for r in head.select("url").collect()}
     assert 0 < len(head_urls) < len(expected["results"])
@@ -102,13 +98,13 @@ def test_sink_width_extraction_width_and_parity(spark, pages, expected,
         with _job_group(spark) as stage_widths:
             run_extraction_resumable(
                 spark, src, out, run_id=f"r{run}", resume=resume,
-                partitions=P, table_format=table_format)
+                partitions=P)
             widths = stage_widths()
-        now = _part_files(out)
+        now = _part_files(root)
         new = {t: now[t] - files[t] for t in TABLES}
         files = now
 
-        tables = {t: _read(spark, out, t, table_format) for t in TABLES}
+        tables = {t: read_pages(spark, f"{out}/{t}") for t in TABLES}
         ledger_rows = tables["ledger"].filter(f"run_id = 'r{run}'").count()
         if run == 2:
             # The no-op resume ran no extraction and committed nothing.
@@ -141,14 +137,14 @@ def test_noop_resume_commits_no_snapshot_version(spark, pages, tmp_path):
     from document_convert_to__markdown_spark.sources import snapshot
 
     out = str(tmp_path / "snap")
-    first = run_extraction_resumable(spark, pages, out, run_id="full",
-                                     partitions=P, table_format="snapshot")
+    first = run_extraction_resumable(spark, pages, f"snapshot:{out}",
+                                     run_id="full", partitions=P)
     versions = {t: snapshot.current_version(f"{out}/{t}") for t in TABLES}
     assert all(versions.values()), versions
 
-    again = run_extraction_resumable(spark, pages, out, run_id="noop",
-                                     resume=True, partitions=P,
-                                     table_format="snapshot")
+    again = run_extraction_resumable(spark, pages, f"snapshot:{out}",
+                                     run_id="noop", resume=True,
+                                     partitions=P)
     assert again == first
     assert {t: snapshot.current_version(f"{out}/{t}")
             for t in TABLES} == versions
@@ -174,3 +170,16 @@ def test_aqe_off_keeps_bytes(spark, pages, expected, tmp_path):
                        for t in ("results", "assets"))
     assert _result_keys(results) == expected["results"]
     assert _asset_keys(assets) == expected["assets"]
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("out", ["iceberg:db.out", "table:out"])
+def test_catalog_target_is_refused(spark, pages, out):
+    """Append and resume cannot be exercised against a catalog here, so
+    the sink refuses one before it plans anything."""
+    from document_convert_to__markdown_spark.pipeline.job import (
+        run_extraction_resumable,
+    )
+
+    with pytest.raises(ValueError, match="catalog"):
+        run_extraction_resumable(spark, pages, out)

@@ -91,7 +91,7 @@ def test_snapshot_crash_window_manifest_written_pointer_not(spark, tmp_path):
 
 
 def test_snapshot_sigkill_then_resume_completes(spark, tmp_path):
-    """Real SIGKILL mid-run with --table-format snapshot, then resume:
+    """Real SIGKILL mid-run with a snapshot: output, then resume:
     the manifest-atomic commit must yield exactly one row per url no
     matter where the kill lands (the snapshot twin of the parquet
     kill-resume test)."""
@@ -101,8 +101,8 @@ def test_snapshot_sigkill_then_resume_completes(spark, tmp_path):
 
     proc = subprocess.Popen(
         [sys.executable, "-m", "document_convert_to__markdown_spark.cli",
-         "--n-docs", str(n_docs), "--output", out, "--cores", "2",
-         "--partitions", "16", "--table-format", "snapshot"],
+         "--n-docs", str(n_docs), "--output", f"snapshot:{out}",
+         "--cores", "2", "--partitions", "16"],
         cwd=REPO, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         start_new_session=True,
     )
@@ -134,8 +134,8 @@ def test_snapshot_sigkill_then_resume_completes(spark, tmp_path):
 
     pages = synth_pages_df(spark, n_docs)
     summary = run_extraction_resumable(
-        spark, pages, out, run_id="resume", resume=True, partitions=16,
-        table_format="snapshot")
+        spark, pages, f"snapshot:{out}", run_id="resume", resume=True,
+        partitions=16)
     assert sum(summary.values()) == n_docs
 
     results = snap.read(spark, f"{out}/results")
